@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-partition checkpoint manifest (SURVEY.md §2 A13–A14).
@@ -34,15 +34,20 @@ object Checkpoint {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  def committedParts(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!pathExists(spark, manifestPath(outDir))) Set.empty
+  /** Every manifest row, in one job: the explicit schema spares Parquet its
+    * schema-inference job. Rows of every status are returned. */
+  def manifest(spark: SparkSession, outDir: String): Seq[ManifestRow] =
+    if (!pathExists(spark, manifestPath(outDir))) Nil
     else {
-      import spark.implicits._
-      spark.read.parquet(manifestPath(outDir))
-        .filter(col("status") === "done")
-        .select($"part_id").as[Int].collect().toSet
+      val enc = Encoders.product[ManifestRow]
+      spark.read.schema(enc.schema).parquet(manifestPath(outDir)).as(enc).collect().toSeq
     }
-  }
+
+  def committedParts(spark: SparkSession, outDir: String): Set[Int] =
+    done(manifest(spark, outDir)).map(_.part_id).toSet
+
+  /** The rows that commit their part. */
+  def done(rows: Seq[ManifestRow]): Seq[ManifestRow] = rows.filter(_.status == "done")
 
   def commit(spark: SparkSession, outDir: String, rows: Seq[ManifestRow]): Unit = {
     import spark.implicits._
@@ -50,27 +55,33 @@ object Checkpoint {
       rows.toDF().coalesce(1).write.mode(SaveMode.Append).parquet(manifestPath(outDir))
   }
 
-  /** Per-part lineage stats from a partial-triples frame (one pass; marker
-    * rows already filtered out by the caller). `todo` seeds the row set: every
-    * attempted part gets a 'done' row even when it held zero in-scope pages or
-    * produced zero triples — otherwise an empty part would be missing from the
-    * manifest and recomputed on EVERY resume. `pagesByPart` comes from the
-    * persisted page-marker rows (Pipeline.run), so no input re-scan is needed.
-    * wall_ms is the shared run wall clock (see object scaladoc). */
-  def partStats(todo: Seq[Int], partials: DataFrame, pagesByPart: Map[Int, Long],
-                wallMs: Long): Seq[ManifestRow] = {
-    val byPart = partials
-      .groupBy(col("part_id"))
-      .agg(count(lit(1)).as("n_triples"), sum(col("n")).as("n_evidence"),
+  /** Per-part lineage of a partials frame (relations and page-marker rows,
+    * subj IS NULL on markers) in ONE aggregate: page count from the in-scope
+    * markers, then distinct triples, evidence and an order-independent
+    * checksum over the relation rows. Only parts with at least one marker
+    * row get a 'done' row: a part PRESENT in the input commits even with 0
+    * in-scope pages or 0 triples (otherwise it would be recomputed on every
+    * resume), while a part with NO input pages is treated as not yet seen
+    * (an interrupted run's unseen input must stay uncommitted — ResumeSpec's
+    * crash model). wall_ms is the shared run wall clock (object scaladoc). */
+  def lineage(partials: DataFrame, wallMs: Long): Seq[ManifestRow] = {
+    val marker = col("subj").isNull
+    val rel = col("subj").isNotNull
+    partials.groupBy(col("part_id"))
+      .agg(
+        count(when(marker, 1)).as("n_markers"),
+        sum(when(marker && col("pred") === Stages.PageMarkerIn, col("n")).otherwise(0L))
+          .as("n_pages"),
+        count(when(rel, 1)).as("n_triples"),
+        coalesce(sum(when(rel, col("n"))), lit(0L)).as("n_evidence"),
         // xor-fold: order-independent, overflow-free content checksum
-        bit_xor(xxhash64(col("subj"), col("pred"), col("obj"), col("n"))).as("checksum"))
-      .collect()
-      .map(r => r.getAs[Int]("part_id") ->
-        (r.getAs[Long]("n_triples"), r.getAs[Long]("n_evidence"), r.getAs[Long]("checksum")))
-      .toMap
-    todo.map { p =>
-      val (t, e, c) = byPart.getOrElse(p, (0L, 0L, 0L))
-      ManifestRow(p, "done", pagesByPart.getOrElse(p, 0L), t, e, c, wallMs)
-    }
+        coalesce(bit_xor(when(rel, xxhash64(col("subj"), col("pred"), col("obj"), col("n")))),
+          lit(0L)).as("checksum"))
+      .filter(col("n_markers") > 0)
+      .collect().toSeq
+      .map(r => ManifestRow(r.getAs[Int]("part_id"), "done", r.getAs[Long]("n_pages"),
+        r.getAs[Long]("n_triples"), r.getAs[Long]("n_evidence"), r.getAs[Long]("checksum"),
+        wallMs))
+      .sortBy(_.part_id)
   }
 }

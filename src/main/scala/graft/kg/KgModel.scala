@@ -306,24 +306,26 @@ object KgModel {
     spark.sparkContext.broadcast(new KgModel(toMap(uni0), toMap(bi0), preds, w, tau))
   }
 
-  /** Load dictionary + weights + meta from fixture parquet and broadcast. */
+  /** Load dictionary + weights + meta from fixture parquet and broadcast.
+    * Each table is read with an explicit schema (the columns the model
+    * needs), so Parquet runs no schema-inference job: one collect per table. */
   def load(spark: SparkSession, fixturesDir: String): Broadcast[KgModel] = {
     import spark.implicits._
-    val dict = spark.read.parquet(s"$fixturesDir/entity_dict.parquet")
-      .select($"surface", $"entity_id", $"ent_type", $"canonical", $"prior")
+    def table(name: String, ddl: String) =
+      spark.read.schema(ddl).parquet(s"$fixturesDir/$name.parquet")
+    val dict = table("entity_dict",
+        "surface string, entity_id bigint, ent_type string, canonical string, prior double")
       .as[(String, Long, String, String, Double)].collect()
       .map { case (s, id, t, c, p) => DictEntry(s, id, t, c, p) }
       .toSeq
-    val preds = spark.read.parquet(s"$fixturesDir/predicates.parquet")
-      .select($"pred", $"template", $"subj_type", $"obj_type")
+    val preds = table("predicates",
+        "pred string, template string, subj_type string, obj_type string")
       .as[(String, String, String, String)].collect()
       .map { case (p, t, st, ot) => Predicate(p, t, st, ot) }
       .toSeq
-    val weightRows = spark.read.parquet(s"$fixturesDir/weights.parquet")
-      .select($"pred", $"feature_id", $"weight")
+    val weightRows = table("weights", "pred string, feature_id bigint, weight double")
       .as[(String, Long, Double)].collect().toSeq
-    val tau = spark.read.parquet(s"$fixturesDir/model_meta.parquet")
-      .select($"tau").as[Double].head()
+    val tau = table("model_meta", "tau double").as[Double].head()
     fromData(spark, dict, preds, weightRows, tau)
   }
 }

@@ -4,7 +4,7 @@ import graft.io.TableIO
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.fs.Path
 
 /** End-to-end KG-construction pipeline (SURVEY.md §3.2 E1).
   *
@@ -32,7 +32,14 @@ object Pipeline {
       numParts: Int = 64,
       numBuckets: Int = 16,
       repartitionInput: Boolean = true,
-      mentionMode: String = "scan")
+      mentionMode: String = "scan") {
+    // checked on construction, so a bad config fails before any Spark job
+    require(langs.nonEmpty, "langs must not be empty")
+    require(numParts >= 1, s"numParts must be >= 1, got $numParts")
+    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
+    require(mentionMode == "scan" || mentionMode == "aho",
+      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
+  }
 
   /** `mentions`/`candidates` come from task-side accumulators: retried or
     * speculatively-executed tasks double-count, so treat them as approximate
@@ -66,99 +73,128 @@ object Pipeline {
 
   /** Checkpointed, resumable run over a webpages table on disk. Reprocesses
     * only part_ids missing from the manifest; finalize merges all partials
-    * into the bucketed output table. Safe to re-run after any crash. */
+    * into the bucketed output table. Safe to re-run after any crash.
+    *
+    * Spark jobs a run of 64 parts launches: 16 when it resumes with some parts
+    * left to compute, 15 on a fresh outDir (no manifest to read). Under AQE
+    * each exchange costs one job for its map stage; a directory is listed by
+    * a job only when it holds more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) entries.
+    *  - 4, model load: one collect per fixture table (explicit schemas, so
+    *    no schema-inference jobs);
+    *  - 1, manifest read: one collect of every [[Checkpoint.ManifestRow]],
+    *    giving both the committed parts and their triple counts;
+    *  - 1, input schema inference (skipped when every part is committed);
+    *  - 2, partials write: the url-hash exchange and the extraction +
+    *    per-part aggregation + write;
+    *  - 1, partials listing (one part_id directory per part): ONE file index
+    *    shared by the lineage aggregate and finalize;
+    *  - 2, lineage: one groupBy(part_id) gives page counts, the commit rule
+    *    and each part's triples, evidence and checksum;
+    *  - 1, manifest commit;
+    *  - 2, finalize: one exchange on `bucket`, then merge + write (the
+    *    merge groups by (subj, pred, obj, bucket), which the exchange
+    *    already satisfies); emptiness comes from the manifest's exact
+    *    `n_triples`, not from a query;
+    *  - 2, the exact output row count.
+    */
   def run(spark: SparkSession, webpagesPath: String, cfg: Config): RunStats = {
     val t0 = System.nanoTime()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val stageListener = new StageMetricsListener
     spark.sparkContext.addSparkListener(stageListener)
+    val stats = try runWith(spark, webpagesPath, cfg, t0)
+      finally spark.sparkContext.removeSparkListener(stageListener)
+    writeMetrics(spark, cfg.outDir, stats, stageListener.lines)
+    stats
+  }
 
+  private def runWith(spark: SparkSession, webpagesPath: String, cfg: Config,
+                      t0: Long): RunStats = {
     val model = KgModel.load(spark, cfg.fixturesDir)
-    val webpages = spark.read.parquet(webpagesPath)
-    val committed = Checkpoint.committedParts(spark, cfg.outDir)
+    val committedRows = Checkpoint.done(Checkpoint.manifest(spark, cfg.outDir))
+    val committed = committedRows.map(_.part_id).toSet
     val todo = (0 until cfg.numParts).filterNot(committed.contains)
 
     val accMentions = spark.sparkContext.longAccumulator("kg.mentions")
     val accCandidates = spark.sparkContext.longAccumulator("kg.candidates")
 
-    var pages = 0L
-    if (todo.nonEmpty) {
-      // single-pass lineage: EVERY page (in scope or not) flows once, tagged;
-      // out-of-scope rows carry (url, nulls) only and skip extraction. Each
-      // page emits one marker row (subj IS NULL) beside its relations, so page
-      // counts and the present-part commit rule are read back from the written
-      // partials — the input is scanned exactly once per run (LineageSpec
-      // asserts), where round 2 paid two extra (column-pruned) input scans.
-      val part = Stages.partitionedAll(webpages, cfg.langs, cfg.numParts, cfg.repartitionInput)
-        .filter(col("part_id").isin(todo: _*))
-      val rels = Stages.relations(
-        Stages.tokenized(Stages.sentencesOuter(Stages.pageText(part))),
-        model, Some(accMentions), Some(accCandidates), cfg.mentionMode,
-        pageMarkers = true)
-      val partials = Stages.partialTriples(rels)
+    def readPartials() = spark.read.schema(partialsSchema).parquet(partialsPath(cfg.outDir))
+    val (partials, newRows) =
+      if (todo.nonEmpty) {
+        // single-pass lineage: EVERY page (in scope or not) flows once, tagged;
+        // out-of-scope rows carry (url, nulls) only and skip extraction. Each
+        // page emits one marker row (subj IS NULL) beside its relations, so page
+        // counts and the present-part commit rule are read back from the written
+        // partials — the input is scanned exactly once per run (LineageSpec
+        // asserts), where round 2 paid two extra (column-pruned) input scans.
+        val part = Stages.partitionedAll(spark.read.parquet(webpagesPath), cfg.langs,
+            cfg.numParts, cfg.repartitionInput)
+          .filter(col("part_id").isin(todo: _*))
+        val rels = Stages.relations(
+          Stages.tokenized(Stages.sentencesOuter(Stages.pageText(part))),
+          model, Some(accMentions), Some(accCandidates), cfg.mentionMode,
+          pageMarkers = true)
 
-      // dynamic partition overwrite: a rerun replaces exactly the part dirs
-      // it recomputes — idempotent commits (Checkpoint scaladoc)
-      partials.write.mode(SaveMode.Overwrite)
-        .partitionBy("part_id").parquet(partialsPath(cfg.outDir))
+        // dynamic partition overwrite: a rerun replaces exactly the part dirs
+        // it recomputes — idempotent commits (Checkpoint scaladoc)
+        Stages.partialTriples(rels).write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("part_id").parquet(partialsPath(cfg.outDir))
 
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      val partialsBack = spark.read.schema(partialsSchema).parquet(partialsPath(cfg.outDir))
-        .filter(col("part_id").isin(todo: _*))
-      // commit rule: a part PRESENT in the input commits 'done' even when all
-      // its pages are out of scope (0 in-scope pages — without this it would
-      // be recomputed on every resume); a part with NO input pages at all has
-      // no marker rows and is treated as not-yet-seen (an interrupted run's
-      // unseen input must stay uncommitted — ResumeSpec's crash model).
-      // Marker groups are tiny (≤2 rows per part), so this is a scan of the
-      // just-written partials, never of the input.
-      val pagesByPart = partialsBack.filter(col("subj").isNull)
-        .groupBy(col("part_id"))
-        .agg(sum(when(col("pred") === Stages.PageMarkerIn, col("n")).otherwise(0L))
-          .as("n_pages"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val rows = Checkpoint.partStats(todo.filter(pagesByPart.contains),
-        partialsBack.filter(col("subj").isNotNull), pagesByPart, wallMs)
-      Checkpoint.commit(spark, cfg.outDir, rows)
-      pages = rows.map(_.n_pages).sum
-    }
+        val wallMs = (System.nanoTime() - t0) / 1000000L
+        // one file index for the lineage aggregate and finalize
+        val all = readPartials()
+        val rows = Checkpoint.lineage(all.filter(col("part_id").isin(todo: _*)), wallMs)
+        Checkpoint.commit(spark, cfg.outDir, rows)
+        (Some(all), rows)
+      } else if (Checkpoint.pathExists(spark, partialsPath(cfg.outDir))) (Some(readPartials()), Nil)
+      else (None, Nil)
 
-    // finalize (cheap, always rerun): merge all committed partials. A run
-    // whose input produced no partials (e.g. no pages in scope) still commits
-    // a valid empty output table.
-    val partials0 =
-      if (Checkpoint.pathExists(spark, partialsPath(cfg.outDir)))
-        spark.read.schema(partialsSchema).parquet(partialsPath(cfg.outDir)).drop("part_id")
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(partialsSchema.dropRight(1)))
-    val merged = Stages.mergeTriples(partials0)
-      .withColumn("bucket", Stages.subjBucket(cfg.numBuckets))
-    val io = TableIO.Parquet(cfg.outDir)
-    // a partitionBy write of an empty frame yields no schema-bearing files —
-    // fall back to a plain (schema-preserving) empty parquet table
-    val mergedEmpty = merged.isEmpty
-    io.write(
-      merged.repartition(col("bucket")).sortWithinPartitions("subj", "pred", "obj"),
-      "triples", partitionCols = if (mergedEmpty) Nil else Seq("bucket"))
+    // finalize (cheap, always rerun): merge all committed partials in one
+    // shuffle on the output bucket. A run whose input produced no triples
+    // (e.g. no pages in scope) still commits a valid empty output table: a
+    // partitionBy write of an empty frame yields no schema-bearing files, so
+    // that table is written unpartitioned instead.
+    val merged = Stages.mergeTriplesBy(
+      partials.getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], partialsSchema))
+        .withColumn("bucket", Stages.subjBucket(cfg.numBuckets))
+        .repartition(col("bucket")),
+      col("bucket"))
+      .select(TriplesColumns.map(col): _*)
+    val empty = (committedRows ++ newRows).map(_.n_triples).sum == 0L
+    TableIO.Parquet(cfg.outDir).write(merged, "triples",
+      partitionCols = if (empty) Nil else Seq("bucket"))
 
     // explicit schema: an all-empty write may contain no schema-bearing files
     val nTriples = spark.read.schema(merged.schema).parquet(triplesPath(cfg.outDir)).count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    val stats = RunStats(todo.size, committed.size, pages,
+    RunStats(todo.size, committed.size, newRows.map(_.n_pages).sum,
       accMentions.value, accCandidates.value, nTriples, wallMs)
-    spark.sparkContext.removeSparkListener(stageListener)
-    writeMetrics(cfg.outDir, stats, stageListener.lines)
-    stats
   }
 
-  /** A14 — run-level metrics log (per-partition lineage lives in _manifest). */
-  private def writeMetrics(outDir: String, s: RunStats, stageLines: Seq[String]): Unit = {
+  /** Output table columns; `bucket` is the partition column of a non-empty
+    * table and a plain last column of an empty one. */
+  private val TriplesColumns =
+    Seq("subj", "pred", "obj", "n_evidence", "score", "first_url", "bucket")
+
+  /** A14 — run-level metrics log (per-partition lineage lives in _manifest),
+    * written through the outDir's Hadoop FileSystem. Object stores have no
+    * append, so the log is read and rewritten whole. */
+  private def writeMetrics(spark: SparkSession, outDir: String, s: RunStats,
+                           stageLines: Seq[String]): Unit = {
     val run = s"""{"parts_processed":${s.partsProcessed},"parts_skipped":${s.partsSkipped},""" +
       s""""pages":${s.pages},"mentions":${s.mentions},"candidates":${s.candidates},""" +
       s""""triples":${s.triples},"wall_ms":${s.wallMs}}"""
-    val all = (run +: stageLines).mkString("", "\n", "\n")
-    Files.write(Paths.get(s"$outDir/metrics.jsonl"), all.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    val path = new Path(s"$outDir/metrics.jsonl")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val prev =
+      if (!fs.exists(path)) Array.emptyByteArray
+      else { val in = fs.open(path); try in.readAllBytes() finally in.close() }
+    val out = fs.create(path, true)
+    try {
+      out.write(prev)
+      out.write((run +: stageLines).mkString("", "\n", "\n").getBytes("UTF-8"))
+    } finally out.close()
   }
 }

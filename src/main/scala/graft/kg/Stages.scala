@@ -231,9 +231,15 @@ object Stages {
     * measures are algebraic so partial+final loses nothing). Lineage
     * page-marker rows (subj IS NULL), when present, are dropped here so every
     * consumer of merged triples sees relations only. */
-  def mergeTriples(partials: DataFrame): DataFrame =
+  def mergeTriples(partials: DataFrame): DataFrame = mergeTriplesBy(partials)
+
+  /** [[mergeTriples]] grouped by extra keys as well, which must be functions
+    * of the triple (Pipeline.run passes the output bucket of subj, so its
+    * exchange on bucket already satisfies the merge's distribution). The
+    * extra keys come after (subj, pred, obj) in the output. */
+  def mergeTriplesBy(partials: DataFrame, extraKeys: Column*): DataFrame =
     partials.filter(col("subj").isNotNull)
-      .groupBy(col("subj"), col("pred"), col("obj"))
+      .groupBy(Seq(col("subj"), col("pred"), col("obj")) ++ extraKeys: _*)
       .agg(sum(col("n")).as("n_evidence"), max(col("score")).as("score"),
         graft.plans.GraftExtensions.minStr(col("first_url")).as("first_url"))
 

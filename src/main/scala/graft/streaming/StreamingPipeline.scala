@@ -33,7 +33,6 @@ object StreamingPipeline {
   def start(spark: SparkSession, inputDir: String, model: Broadcast[KgModel],
             cfg: Pipeline.Config, checkpointDir: String,
             maxFilesPerTrigger: Int = 4): StreamingQuery = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // file-source streams need an explicit schema; the input table is
     // self-describing parquet, so take it from the footers already present
     val schema = spark.read.parquet(inputDir).schema
@@ -48,6 +47,7 @@ object StreamingPipeline {
             mentionMode = cfg.mentionMode))
           .withColumn("batch_id", lit(batchId))
           .write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(partialsPath(cfg.outDir))
         ()
