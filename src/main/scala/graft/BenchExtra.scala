@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.commons.text.StringEscapeUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1.4): times each declared
   * query with the NOOP SINK (computes every column of every row, discards the
@@ -36,23 +38,38 @@ object BenchExtra {
     ordered.headOption.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
     }
-    val results = ordered.map { case (name, fn) =>
-      val times = (1 to reps).map { r =>
+    println(measure(spark, sfDir, reps, ordered))
+    spark.stop()
+  }
+
+  /** Times each query `reps` times into the noop sink and returns the JSON
+    * line. A query that throws on any rep is reported as
+    * `"error":"<class>: <message>"` instead of times, and is left out of
+    * `noop_min_total`: the time until a crash measures nothing. */
+  def measure(spark: SparkSession, sfDir: String, reps: Int,
+              queries: Seq[(String, (SparkSession, String) => DataFrame)]): String = {
+    val results = queries.map { case (name, fn) =>
+      val runs = (1 to reps).map { r =>
         spark.sparkContext.setJobDescription(s"$name rep=$r")
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+      }
       spark.sparkContext.setJobDescription(null)
-      name -> (times.head, times(times.size / 2))
+      name -> (runs.collectFirst { case Left(err) => err } match {
+        case Some(err) => Left(err)
+        case None =>
+          val times = runs.collect { case Right(t) => t }.sorted
+          Right((times.head, times(times.size / 2)))
+      })
     }
-    val qs = results.map { case (k, (mn, md)) =>
-      f""""$k":{"min":$mn%.3f,"median":$md%.3f}"""
+    val qs = results.map {
+      case (k, Right((mn, md))) => f""""$k":{"min":$mn%.3f,"median":$md%.3f}"""
+      case (k, Left(err)) => s""""$k":{"error":"${StringEscapeUtils.escapeJson(err)}"}"""
     }.mkString("{", ",", "}")
-    val total = results.map(_._2._1).sum
-    println(s"""{"metric":"noop_min_total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"sf":"$sfDir"}""")
-    spark.stop()
+    val total = results.collect { case (_, Right((mn, _))) => mn }.sum
+    s"""{"metric":"noop_min_total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"sf":"$sfDir"}"""
   }
 }

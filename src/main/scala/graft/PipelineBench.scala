@@ -25,8 +25,6 @@ object PipelineBench {
     // "norepart": extract on input splits instead of the explicit url-hash
     // exchange (quantifies the repartition's cost; SURVEY.md §4.2.1)
     val repartitionInput = !flags.contains("norepart")
-    // "aho": Aho–Corasick mention scan instead of the 2-gram hash-map scan
-    val mentionMode = if (flags.contains("aho")) "aho" else "scan"
     // "p<N>": fix the partition count P (default 4*cpus). For an N-vs-4N
     // scaling pair BOTH legs must run the SAME job — same P — exactly as the
     // same application would on clusters of two sizes; letting P follow the
@@ -111,7 +109,7 @@ object PipelineBench {
       val (busy0, iow0, steal0) = cpuTicks()
       val t0 = System.nanoTime()
       val rels = Stages.extractRelations(input, model, Seq("en"), parts,
-        repartitionInput, mentionMode = mentionMode)
+        repartitionInput)
       val triples = Stages.mergeTriples(Stages.partialTriples(rels))
       triples.write.mode("overwrite").parquet(s"$out/triples")
       val sec = (System.nanoTime() - t0) / 1e9

@@ -10,41 +10,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * each, broadcast once; scoring is a local dot product, never a join).
   */
 final class KgModel(
-    val uni: Map[String, DictEntry],
-    val bi: Map[String, DictEntry],
+    val dict: Map[String, DictEntry], // surface -> entry, duplicates resolved
     val preds: IndexedSeq[Predicate],
     val weights: Array[Array[Double]], // [predIdx][featureId]
     val tau: Double) extends Serializable {
 
-  /** Aho–Corasick automaton over the same dictionary (A6 mode "aho") —
-    * transient+lazy so it is built once per executor JVM on first use, never
-    * serialized with the broadcast. Equivalence with scanMentions is asserted
-    * by AhoSpec/PipelineSpec. */
-  @transient lazy val aho: TokenAho = TokenAho.build((uni.values ++ bi.values).toSeq)
-
-  /** Bigram dictionary as a two-level map (first token → second token →
-    * entry), built once per executor JVM: the scan probes it WITHOUT
-    * concatenating "t1 t2" per position — at corpus scale that concat was one
-    * short-lived String per token of input, pure allocator/memory-bandwidth
-    * churn on wide executors. */
-  @transient private lazy val biNested: Map[String, Map[String, DictEntry]] =
-    bi.groupBy(_._1.takeWhile(_ != ' ')).map { case (t1, grp) =>
-      t1 -> grp.map { case (surface, e) => surface.drop(t1.length + 1) -> e }
-    }
-
-  /** UTF8String-keyed one-probe dictionary twin, built once per executor
-    * JVM — the native RelationsGenExpr probes it with the raw tokens off
-    * Catalyst ArrayData, so the scan allocates NO per-token Strings.
-    * UTF8String equals/hashCode are byte-wise, which for the valid UTF-8 the
-    * engine produces coincides exactly with String equality. */
-  @transient lazy val dictProbe: TokenDict = TokenDict.build(uni, biNested)
+  /** UTF8String token trie over [[dict]], built once per executor JVM — the
+    * native RelationsGenExpr probes it with the raw tokens off Catalyst
+    * ArrayData, so the scan allocates NO per-token Strings. UTF8String
+    * equals/hashCode are byte-wise, which for the valid UTF-8 the engine
+    * produces coincides exactly with String equality. */
+  @transient lazy val dictProbe: TokenDict = TokenDict.build(dict)
 
   /** Canonical-entity + predicate names pre-encoded as UTF8String, built once
     * per executor JVM: emitted relations are sparse, but handing Catalyst a
     * cached reference beats re-encoding the same few canonicals per row. */
   @transient lazy val outU8: java.util.HashMap[String, UTF8String] = {
     val m = new java.util.HashMap[String, UTF8String]()
-    (uni.values ++ bi.values).foreach(e =>
+    dict.values.foreach(e =>
       m.put(e.canonical, UTF8String.fromString(e.canonical)))
     preds.foreach(p => m.put(p.pred, UTF8String.fromString(p.pred)))
     m
@@ -57,10 +40,12 @@ final class KgModel(
 
   import KgModel.{mentionScratch, relationScratch}
 
-  /** [[scanMentions]] on raw UTF8String tokens — identical greedy semantics
-    * over the one-probe [[TokenDict]] (RelationsGenSpec asserts equality):
-    * at each position ONE hash+probe answers bigram-head and unigram at
-    * once; the result is a [[KgModel.ScratchView]] over the per-thread
+  /** Greedy longest-match dictionary scan over lowercase tokens (pinned
+    * semantics, SURVEY.md §2 A6): at each position take the longest
+    * dictionary surface starting there, of any token length, consume its
+    * tokens and advance; a position no surface starts at is skipped. One
+    * root probe per position, then one child scan per further matched
+    * token. The result is a [[KgModel.ScratchView]] over the per-thread
     * [[mentionScratch]], handed to the scorer without an immutable-copy
     * round and reused on the next call. The consume-before-next-scan
     * invariant is ENFORCED: a retained view throws on access after the next
@@ -80,28 +65,30 @@ final class KgModel(
     val n = tokens.length
     var i = 0
     while (i < n) {
-      var matched = false
+      var best: DictEntry = null
+      var bestEnd = i + 1
       val slot = d.find(tokens(i))
       if (slot >= 0) {
-        if (i + 1 < n) {
-          val e = d.biAt(slot, tokens(i + 1))
-          if (e != null) {
-            out += Mention(e.entityId, e.canonical, e.entType, i, i + 2)
-            i += 2; matched = true
-          }
-        }
-        if (!matched) {
-          val e = d.uniAt(slot)
-          if (e != null) {
-            out += Mention(e.entityId, e.canonical, e.entType, i, i + 1)
-            i += 1; matched = true
-          }
+        var node = d.rootAt(slot)
+        var j = i + 1
+        while (node != null) {
+          if (node.entry != null) { best = node.entry; bestEnd = j }
+          node = if (j < n) node.child(tokens(j)) else null
+          j += 1
         }
       }
-      if (!matched) i += 1
+      if (best != null)
+        out += Mention(best.entityId, best.canonical, best.entType, i, bestEnd)
+      i = bestEnd
     }
     view
   }
+
+  /** [[scanMentionsU8]] over String tokens, returning an immutable copy
+    * (safe to retain) — for the String-token callers: training and the
+    * udf oracle. */
+  def scanMentions(tokens: scala.collection.IndexedSeq[String]): IndexedSeq[Mention] =
+    scanMentionsU8(tokens.iterator.map(UTF8String.fromString).toArray).toIndexedSeq
 
   /** Bucket-major transpose of the weight matrix, built once per executor
     * JVM: wFlat(fid * nPreds + p) == weights(p)(fid). The scoring loop walks
@@ -121,37 +108,6 @@ final class KgModel(
       p += 1
     }
     flat
-  }
-
-  /** Greedy longest-match dictionary scan over lowercase tokens (pinned
-    * semantics, SURVEY.md §2 A6): at each position prefer the 2-gram match,
-    * consume matched tokens, advance. The broadcast-join implementation in
-    * MentionJoin reproduces exactly this via sorted greedy selection
-    * (MentionEquivalenceSpec asserts equality). */
-  def scanMentions(tokens: scala.collection.IndexedSeq[String]): IndexedSeq[Mention] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
-    val n = tokens.length
-    var i = 0
-    while (i < n) {
-      var matched = false
-      if (i + 1 < n) {
-        val inner = biNested.getOrElse(tokens(i), null)
-        val e = if (inner == null) null else inner.getOrElse(tokens(i + 1), null)
-        if (e != null) {
-          out += Mention(e.entityId, e.canonical, e.entType, i, i + 2)
-          i += 2; matched = true
-        }
-      }
-      if (!matched) {
-        val e = uni.getOrElse(tokens(i), null)
-        if (e != null) {
-          out += Mention(e.entityId, e.canonical, e.entType, i, i + 1)
-          i += 1; matched = true
-        }
-      }
-      if (!matched) i += 1
-    }
-    out.toIndexedSeq
   }
 
   /** Score every ordered, span-disjoint mention pair; emit the argmax
@@ -292,18 +248,17 @@ object KgModel {
   /** Build + broadcast a model from in-memory rows (no I/O). */
   def fromData(spark: SparkSession, dict: Seq[DictEntry], preds0: Seq[Predicate],
                weightRows: Seq[(String, Long, Double)], tau: Double): Broadcast[KgModel] = {
-    def toMap(es: Seq[DictEntry]): Map[String, DictEntry] =
-      es.groupBy(_.surface).map { case (s, grp) =>
-        s -> grp.minBy(e => (-e.prior, e.entityId))
-      }
-    val (bi0, uni0) = dict.partition(_.surface.contains(' '))
+    // duplicate surfaces: the highest prior, then the lowest entity id wins
+    val resolved = dict.groupBy(_.surface).map { case (s, grp) =>
+      s -> grp.minBy(e => (-e.prior, e.entityId))
+    }
     val preds = preds0.sortBy(_.pred).toIndexedSeq
     val predIdx = preds.zipWithIndex.map { case (p, i) => p.pred -> i }.toMap
     val w = Array.fill(preds.length)(new Array[Double](TextModel.FeatureBuckets))
     weightRows.foreach { case (p, fid, wt) =>
       predIdx.get(p).foreach(i => w(i)(fid.toInt) += wt) // collisions sum (pinned)
     }
-    spark.sparkContext.broadcast(new KgModel(toMap(uni0), toMap(bi0), preds, w, tau))
+    spark.sparkContext.broadcast(new KgModel(resolved, preds, w, tau))
   }
 
   /** Load dictionary + weights + meta from fixture parquet and broadcast.

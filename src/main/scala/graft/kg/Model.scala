@@ -6,7 +6,8 @@ package graft.kg
   */
 
 /** An entity-dictionary entry (broadcast; SURVEY.md §2 A6/A10).
-  * `surface` is a lowercase 1- or 2-gram ("w" or "w1 w2"). */
+  * `surface` is a lowercase token sequence joined by single spaces
+  * ("w", "w1 w2", "w1 w2 w3", ...). */
 final case class DictEntry(
     surface: String,
     entityId: Long,

@@ -18,27 +18,20 @@ import org.apache.hadoop.fs.Path
   * with per-part manifest checkpointing/resume [A13] and metrics [A14].
   */
 object Pipeline {
-  /** mentionMode selects the A6 dictionary-scan implementation inside the
-    * fused relations UDF: "scan" = the 1/2-gram hash-map greedy scan (default;
-    * exactly the fixture dictionary's shape), "aho" = the token-level
-    * Aho–Corasick automaton (same greedy semantics — AhoSpec asserts equality
-    * — but handles arbitrary-length surfaces in one O(sentence) pass). The
-    * fully-relational broadcast-join mode lives in [[MentionJoin]] (a
-    * different dataflow, used when mentions themselves are the product). */
+  /** Run configuration. The A6 mention scan has no mode: it always takes,
+    * at each token position, the longest dictionary surface starting there,
+    * for surfaces of any token length ([[KgModel.scanMentionsU8]]). */
   final case class Config(
       fixturesDir: String,
       outDir: String,
       langs: Seq[String] = Seq("en"),
       numParts: Int = 64,
       numBuckets: Int = 16,
-      repartitionInput: Boolean = true,
-      mentionMode: String = "scan") {
+      repartitionInput: Boolean = true) {
     // checked on construction, so a bad config fails before any Spark job
     require(langs.nonEmpty, "langs must not be empty")
     require(numParts >= 1, s"numParts must be >= 1, got $numParts")
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    require(mentionMode == "scan" || mentionMode == "aho",
-      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
   }
 
   /** `mentions`/`candidates` come from task-side accumulators: retried or
@@ -64,8 +57,7 @@ object Pipeline {
   def triples(spark: SparkSession, webpages: DataFrame, model: Broadcast[KgModel],
               cfg: Config): DataFrame = {
     val rels = Stages.extractRelations(
-      webpages, model, cfg.langs, cfg.numParts, cfg.repartitionInput,
-      mentionMode = cfg.mentionMode)
+      webpages, model, cfg.langs, cfg.numParts, cfg.repartitionInput)
     Stages.mergeTriples(Stages.partialTriples(rels))
       .select(col("subj"), col("pred"), col("obj"), col("score"),
         col("n_evidence"), col("first_url"))
@@ -132,8 +124,7 @@ object Pipeline {
           .filter(col("part_id").isin(todo: _*))
         val rels = Stages.relations(
           Stages.tokenized(Stages.sentencesOuter(Stages.pageText(part))),
-          model, Some(accMentions), Some(accCandidates), cfg.mentionMode,
-          pageMarkers = true)
+          model, Some(accMentions), Some(accCandidates), pageMarkers = true)
 
         // dynamic partition overwrite: a rerun replaces exactly the part dirs
         // it recomputes — idempotent commits (Checkpoint scaladoc)

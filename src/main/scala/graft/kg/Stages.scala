@@ -101,12 +101,14 @@ object Stages {
   val PageMarkerIn = "\u0000page_in"
   val PageMarkerOut = "\u0000page_out"
 
-  /** A6–A10 fused: greedy dictionary scan → ordered pair candidates →
-    * hashed featurization → broadcast-weights scoring → linked relations.
-    * One narrow UDF (tokens in, scored relations out) so Catalyst can prune
-    * every other column; accumulators feed per-run metrics (A14 — approximate
-    * under task retries, see Pipeline.RunStats). mentionMode "scan" | "aho"
-    * selects the A6 implementation (Pipeline.Config scaladoc).
+  /** A6–A10 fused: greedy dictionary scan (at each position the longest
+    * dictionary surface starting there, of any token length — see
+    * [[KgModel.scanMentionsU8]]) → ordered pair candidates → hashed
+    * featurization → broadcast-weights scoring → linked relations. One
+    * narrow generator (tokens in, scored relations out) so Catalyst can
+    * prune every other column; accumulators feed per-run metrics (A14 —
+    * approximate under task retries, see Pipeline.RunStats).
+    * `mentionMode` only accepts "scan"; it stays for source compatibility.
     *
     * pageMarkers=true (requires the [[partitionedAll]] + [[sentencesOuter]]
     * flow upstream, which supplies `in_scope` and per-page anchor rows):
@@ -117,15 +119,14 @@ object Stages {
                 accCandidates: Option[LongAccumulator] = None,
                 mentionMode: String = "scan",
                 pageMarkers: Boolean = false): DataFrame = {
-    require(mentionMode == "scan" || mentionMode == "aho",
-      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
+    require(mentionMode == "scan", s"unknown mentionMode '$mentionMode' (expected scan)")
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val (anchorCol, inScopeCol) = markerCols(pageMarkers)
     val gen = graft.plans.RelationsGenExpr(
       ColumnBridge.expression(col("tokens")),
       ColumnBridge.expression(anchorCol),
       ColumnBridge.expression(inScopeCol),
-      model, mentionMode == "aho", accMentions, accCandidates)
+      model, accMentions, accCandidates)
     tokenized.select(col("url"), col("part_id"),
       ColumnBridge.column(gen).as(Seq("subj", "pred", "obj", "score")))
   }
@@ -138,11 +139,7 @@ object Stages {
   def relationsUdf(tokenized: DataFrame, model: Broadcast[KgModel],
                    accMentions: Option[LongAccumulator] = None,
                    accCandidates: Option[LongAccumulator] = None,
-                   mentionMode: String = "scan",
                    pageMarkers: Boolean = false): DataFrame = {
-    require(mentionMode == "scan" || mentionMode == "aho",
-      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
-    val useAho = mentionMode == "aho"
     val scoreUdf = udf { (tokens: Seq[String], anchor: Boolean, inScope: Boolean) =>
       val m = model.value
       val rels: Seq[ScoredRelation] =
@@ -155,7 +152,7 @@ object Stages {
             case is: scala.collection.IndexedSeq[String @unchecked] => is
             case other => other.toIndexedSeq
           }
-          val ms = if (useAho) m.aho.scanGreedy(toks) else m.scanMentions(toks)
+          val ms = m.scanMentions(toks)
           accMentions.foreach(_.add(ms.length.toLong))
           if (ms.length >= 2) {
             accCandidates.foreach(_.add((ms.length.toLong * (ms.length - 1))))
@@ -186,11 +183,10 @@ object Stages {
                        langs: Seq[String], numParts: Int,
                        repartitionInput: Boolean = true,
                        accMentions: Option[LongAccumulator] = None,
-                       accCandidates: Option[LongAccumulator] = None,
-                       mentionMode: String = "scan"): DataFrame =
+                       accCandidates: Option[LongAccumulator] = None): DataFrame =
     relations(
       tokenized(sentences(pageText(partitioned(webpages, langs, numParts, repartitionInput)))),
-      model, accMentions, accCandidates, mentionMode)
+      model, accMentions, accCandidates)
 
   /** A11 phase 1 — per-part partial canonicalization. Keyed by part_id first:
     * after the explicit repartition the rows are already hash-distributed by

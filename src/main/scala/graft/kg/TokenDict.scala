@@ -2,30 +2,28 @@ package graft.kg
 
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Open-addressed, UTF8String-keyed dictionary probe for the A6 greedy scan
-  * (built once per executor JVM from the broadcast model).
+/** UTF8String token trie over the entity dictionary for the A6 greedy scan
+  * (built once per executor JVM from the broadcast model). A surface of any
+  * token length is one root-to-node path; the scan takes, at each position,
+  * the longest surface that starts there.
   *
-  * One structure answers both questions the scan asks at a position — "is
-  * this token a bigram head (and does the next token complete it)?" and "is
-  * it a unigram surface?" — with ONE hash + probe. The java.util.HashMap
-  * twins this replaces cost the round-4 JFR ~20% of executor CPU: two maps
-  * probed per position (two O(len) hashCodes), plus equals chains through
-  * collision/tree bins (ByteArrayMethods.arrayEquals was the single hottest
-  * frame). Here the table is power-of-2 sized at load <= 0.25 with linear
-  * probing, so a miss — the overwhelmingly common case for webtext tokens —
-  * usually terminates on the first empty slot without a single byte
-  * comparison, and bigram completions are a short linear scan of the head's
-  * (second-token, entry) columns, only reached when the head matched.
+  * The root level is an open-addressed table keyed by a surface's first
+  * token. The java.util.HashMap twins this replaced cost the round-4 JFR
+  * ~20% of executor CPU: two maps probed per position (two O(len)
+  * hashCodes), plus equals chains through collision/tree bins
+  * (ByteArrayMethods.arrayEquals was the single hottest frame). Here the
+  * table is power-of-2 sized at load <= 0.25 with linear probing, so a miss
+  * — the overwhelmingly common case for webtext tokens — usually terminates
+  * on the first empty slot without a single byte comparison. Deeper levels
+  * are a short linear scan of a node's children, only reached when the
+  * previous token matched.
   */
 final class TokenDict private (
     mask: Int,
     keys: Array[UTF8String],
-    uniV: Array[DictEntry],
-    biSecond: Array[Array[UTF8String]],
-    biV: Array[Array[DictEntry]]) extends Serializable {
+    roots: Array[TokenDict.Node]) extends Serializable {
 
-  /** Slot of `t`, or -1 when the token is neither a unigram surface nor a
-    * bigram head. */
+  /** Slot of `t` in the root table, or -1 when no surface starts with `t`. */
   def find(t: UTF8String): Int = {
     var idx = TokenDict.slotHash(t) & mask
     while (true) {
@@ -37,25 +35,40 @@ final class TokenDict private (
     -1 // unreachable: load < 1 guarantees an empty slot
   }
 
-  /** Unigram entry at a found slot (null when the token only heads bigrams). */
-  def uniAt(slot: Int): DictEntry = uniV(slot)
+  /** Trie node of the first token at a found slot. */
+  def rootAt(slot: Int): TokenDict.Node = roots(slot)
+}
 
-  /** Bigram entry completed by `next` at a found slot, or null. */
-  def biAt(slot: Int, next: UTF8String): DictEntry = {
-    val ks = biSecond(slot)
-    if (ks == null) null
-    else {
+object TokenDict {
+
+  /** One trie node: the surface ending here (null when it is only a prefix
+    * of longer surfaces) and the (next-token, child) columns. */
+  final class Node extends Serializable {
+    var entry: DictEntry = _
+    var next: Array[UTF8String] = Array.empty
+    var kids: Array[Node] = Array.empty
+
+    /** Child reached by token `t`, or null. */
+    def child(t: UTF8String): Node = {
       var j = 0
-      while (j < ks.length) {
-        if (ks(j).equals(next)) return biV(slot)(j)
+      while (j < next.length) {
+        if (next(j).equals(t)) return kids(j)
         j += 1
       }
       null
     }
-  }
-}
 
-object TokenDict {
+    private[TokenDict] def childOrAdd(t: UTF8String): Node = {
+      val c = child(t)
+      if (c != null) c
+      else {
+        val n = new Node
+        next = next :+ t
+        kids = kids :+ n
+        n
+      }
+    }
+  }
 
   /** One-load slot hash: getPrefix (first <= 8 bytes, zero-padded, one
     * unaligned read) multiply-mixed with the byte length. Replaces the
@@ -72,30 +85,32 @@ object TokenDict {
     (x >>> 32).toInt
   }
 
-  /** Build from the model's String-keyed maps (driver or executor side; the
-    * probe itself is rebuilt lazily per JVM, never serialized). */
-  def build(uni: Map[String, DictEntry],
-            biNested: Map[String, Map[String, DictEntry]]): TokenDict = {
-    val heads = (uni.keySet ++ biNested.keySet).toArray
+  /** Build from the model's surface → entry map. A surface's tokens are its
+    * single-space-separated parts, the same split the tokenizer's output is
+    * joined back with. */
+  def build(dict: Map[String, DictEntry]): TokenDict = {
+    val paths = dict.toSeq.sortBy(_._1).map { case (s, e) =>
+      s.split(" ", -1).map(UTF8String.fromString) -> e
+    }
+    val heads = paths.map(_._1.head).distinct
     var cap = 8
     while (cap < heads.length * 4) cap <<= 1
     val mask = cap - 1
     val keys = new Array[UTF8String](cap)
-    val uniV = new Array[DictEntry](cap)
-    val biSecond = new Array[Array[UTF8String]](cap)
-    val biV = new Array[Array[DictEntry]](cap)
-    heads.foreach { h =>
-      val k = UTF8String.fromString(h)
+    val roots = new Array[Node](cap)
+    heads.foreach { k =>
       var idx = slotHash(k) & mask
       while (keys(idx) != null) idx = (idx + 1) & mask
       keys(idx) = k
-      uniV(idx) = uni.getOrElse(h, null)
-      biNested.get(h).foreach { inner =>
-        val seconds = inner.toArray
-        biSecond(idx) = seconds.map(p => UTF8String.fromString(p._1))
-        biV(idx) = seconds.map(_._2)
-      }
+      roots(idx) = new Node
     }
-    new TokenDict(mask, keys, uniV, biSecond, biV)
+    val d = new TokenDict(mask, keys, roots)
+    paths.foreach { case (toks, e) =>
+      var node = roots(d.find(toks.head))
+      var j = 1
+      while (j < toks.length) { node = node.childOrAdd(toks(j)); j += 1 }
+      node.entry = e
+    }
+    d
   }
 }

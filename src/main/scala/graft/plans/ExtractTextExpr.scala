@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the pinned HTML→text extractor
@@ -101,8 +101,18 @@ object GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => U
   private val winnowFpBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 4,
       "winnow_fp(text, k, window, portable) takes exactly four arguments")
-    WinnowFpExpr(args(0), args(1).eval().asInstanceOf[Int],
-      args(2).eval().asInstanceOf[Int], args(3).eval().asInstanceOf[Boolean])
+    // k, window and portable configure the expression itself, so each must
+    // be a non-null constant of its exact type, checked before eval()
+    def constant(i: Int, name: String, t: DataType): Any = {
+      val a = args(i)
+      val v = if (a.foldable && a.dataType == t) a.eval() else null
+      require(v != null, s"winnow_fp: argument $name must be a non-null " +
+        s"${t.sql} literal, got ${a.sql} of type ${a.dataType.sql}")
+      v
+    }
+    WinnowFpExpr(args(0), constant(1, "k", IntegerType).asInstanceOf[Int],
+      constant(2, "window", IntegerType).asInstanceOf[Int],
+      constant(3, "portable", BooleanType).asInstanceOf[Boolean])
   }
 
   private val langIdInfo = new ExpressionInfo(

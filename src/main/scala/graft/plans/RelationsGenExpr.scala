@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
-import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 /** Native Catalyst Generator for the fused A6–A10 step (mention scan →
@@ -24,8 +23,9 @@ import scala.collection.mutable.ArrayBuffer
   * per row and this does not (the remaining ~14% of executor CPU in the
   * round-4 JFR was exactly this boundary):
   *   - ScalaUDF deserialized every token UTF8String → java String and the
-  *     ArrayData → a fresh wrapper Seq; here the dictionary probe
-  *     (KgModel.scanMentionsU8) and feature hashing (Featurize.U8Toks →
+  *     ArrayData → a fresh wrapper Seq; here the dictionary scan
+  *     (KgModel.scanMentionsU8: greedy longest match over surfaces of any
+  *     token length) and feature hashing (Featurize.U8Toks →
   *     StreamHash.feedUtf8) consume the raw UTF-8 bytes in place — zero
   *     per-token allocations.
   *   - the result Seq[ScoredRelation] was re-encoded case class → Catalyst
@@ -33,10 +33,6 @@ import scala.collection.mutable.ArrayBuffer
   *     emitted as InternalRows directly (canonicals/pred names from the
   *     model's per-executor UTF8String cache), and GenerateExec fans them
   *     out with no intermediate array.
-  *
-  * mentionMode "aho" converts tokens to Strings for the automaton only
-  * (TokenAho is String-keyed; "scan" is the production default) —
-  * featurization still runs allocation-free on the U8 tokens either way.
   *
   * Like every Generator it is planned as a Generate node; CodegenFallback
   * keeps upstream stages (extract/split/tokenize) in their own
@@ -47,7 +43,6 @@ case class RelationsGenExpr(
     anchor: Expression,
     inScope: Expression,
     model: Broadcast[KgModel],
-    useAho: Boolean,
     accMentions: Option[LongAccumulator],
     accCandidates: Option[LongAccumulator])
   extends Generator with CodegenFallback {
@@ -96,9 +91,7 @@ case class RelationsGenExpr(
       val toks = new Array[UTF8String](n)
       var i = 0
       while (i < n) { toks(i) = arr.getUTF8String(i); i += 1 }
-      val strs: IndexedSeq[String] =
-        if (useAho) ArraySeq.unsafeWrapArray(toks.map(_.toString)) else null
-      val ms = if (useAho) m.aho.scanGreedy(strs) else m.scanMentionsU8(toks, msScratch)
+      val ms = m.scanMentionsU8(toks, msScratch)
       accMentions.foreach(_.add(ms.length.toLong))
       if (ms.length >= 2) {
         accCandidates.foreach(_.add(ms.length.toLong * (ms.length - 1)))

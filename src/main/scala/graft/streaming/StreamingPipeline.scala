@@ -43,8 +43,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         Stages.partialTriples(Stages.extractRelations(
-            batch, model, cfg.langs, cfg.numParts, cfg.repartitionInput,
-            mentionMode = cfg.mentionMode))
+            batch, model, cfg.langs, cfg.numParts, cfg.repartitionInput))
           .withColumn("batch_id", lit(batchId))
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")

@@ -58,7 +58,6 @@ class PipelineRunSpec extends AnyFunSuite with SharedSpark {
     try {
       sc.setJobGroup("bad-config", "bad config")
       val bad: Seq[() => Pipeline.Config] = Seq(
-        () => Pipeline.Config(dir, tmp("bad"), mentionMode = "regex"),
         () => Pipeline.Config(dir, tmp("bad"), numParts = 0),
         () => Pipeline.Config(dir, tmp("bad"), numBuckets = 0),
         () => Pipeline.Config(dir, tmp("bad"), langs = Nil))

@@ -163,11 +163,4 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val t16 = Pipeline.triples(spark, webpages, model, cfg.copy(numParts = 16))
     assert(t2.exceptAll(t16).isEmpty && t16.exceptAll(t2).isEmpty)
   }
-
-  test("mentionMode = aho produces the identical triple set end-to-end") {
-    val scan = Pipeline.triples(spark, webpages, model, cfg.copy(mentionMode = "scan"))
-    val aho = Pipeline.triples(spark, webpages, model, cfg.copy(mentionMode = "aho"))
-    assert(scan.exceptAll(aho).isEmpty && aho.exceptAll(scan).isEmpty)
-    assert(aho.count() > 0)
-  }
 }

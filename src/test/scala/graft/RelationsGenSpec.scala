@@ -1,16 +1,17 @@
 package graft
 
-import graft.fixtures.SplitMix64
+import graft.fixtures.{SplitMix64, Vocab}
 import graft.kg._
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native RelationsGenExpr Generator must be a drop-in for the udf+explode
-  * island it replaced: row-for-row equal output on the fixture corpus (both
-  * mention modes, with and without lineage page markers), with the UTF8String
-  * fast paths (streaming UTF-8 hash feed, U8 dictionary scan, U8 verb
-  * likeness) bit-equal to their String twins under adversarial unicode. */
+  * island it replaced: row-for-row equal output on the fixture corpus (with
+  * and without lineage page markers), with the UTF8String fast paths
+  * (streaming UTF-8 hash feed, U8 verb likeness) bit-equal to their String
+  * twins under adversarial unicode and the U8 dictionary scan equal to the
+  * brute-force [[ScanReference]]. */
 class RelationsGenSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val dir = SparkKit.sf0001
@@ -24,14 +25,12 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
       .sortBy(t => (t._1, t._2, String.valueOf(t._3), t._4, String.valueOf(t._5), t._6))
   }
 
-  test("native generator == udf path, scan and aho modes") {
+  test("native generator == udf path") {
     val toks = Stages.tokenized(Stages.sentences(Stages.pageText(
       Stages.partitioned(webpages, Seq("en"), 8))))
-    for (mode <- Seq("scan", "aho")) {
-      val nat = collected(Stages.relations(toks, model, mentionMode = mode))
-      val ref = collected(Stages.relationsUdf(toks, model, mentionMode = mode))
-      assert(nat.nonEmpty && nat == ref, s"mode $mode diverges")
-    }
+    val nat = collected(Stages.relations(toks, model))
+    val ref = collected(Stages.relationsUdf(toks, model))
+    assert(nat.nonEmpty && nat == ref)
   }
 
   test("native generator == udf path with page markers (partitionedAll flow)") {
@@ -122,18 +121,23 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("scanMentionsU8 == scanMentions over fixture-dictionary token streams") {
+  test("scanMentionsU8 == brute-force reference on fixture-dictionary streams and sentences") {
+    import spark.implicits._
     val m = model.value
-    val surfaces = (m.uni.keys ++ m.bi.keys.flatMap(_.split(' '))).toVector
+    val dict = ScanReference.resolve(Vocab.dictEntries)
+    def check(toks: IndexedSeq[String]): Int = {
+      val ref = ScanReference.scan(dict, toks)
+      assert(m.scanMentionsU8(toks.map(UTF8String.fromString).toArray) == ref, s"tokens $toks")
+      ref.length
+    }
+    val surfaces = dict.keys.flatMap(_.split(' ')).toVector
     val noise = Vector("xqz", "the", "of", "and", "binds")
     val pool = surfaces ++ noise
     val rng = new SplitMix64(0x5CAFFEL)
-    for (_ <- 1 to 300) {
-      val toks = IndexedSeq.fill(1 + rng.nextInt(15))(pool(rng.nextInt(pool.length)))
-      val ref = m.scanMentions(toks)
-      val u8 = m.scanMentionsU8(toks.map(UTF8String.fromString).toArray)
-      assert(u8 == ref, s"tokens $toks")
-    }
+    for (_ <- 1 to 300) check(IndexedSeq.fill(1 + rng.nextInt(15))(pool(rng.nextInt(pool.length))))
+    val sentences = Stages.tokenized(Stages.sentences(Stages.pageText(
+      Stages.partitioned(webpages, Seq("en"), 8)))).select($"tokens").as[Seq[String]].collect()
+    assert(sentences.map(t => check(t.toIndexedSeq)).sum > 0, "fixture must contain mentions")
   }
 
   test("retained scratch views throw after the next call (enforced invariant)") {
@@ -146,7 +150,7 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
     assert(e.getMessage.contains("stale"), e.getMessage)
 
     // relation view: stale after a second scoreRelationsTv on the thread
-    val surf = m.uni.keys.toVector.sorted
+    val surf = m.dict.keys.filterNot(_.contains(' ')).toVector.sorted
     assume(surf.size >= 2)
     val eToks = surf.take(2).map(UTF8String.fromString).toArray
     val ms = m.scanMentionsU8(eToks)

@@ -70,4 +70,18 @@ class WinnowFpSpec extends AnyFunSuite with SharedSpark {
     compare(docs, k = 3, window = 2, HashMode.XxHash)
     compare(docs, k = 1, window = 1, HashMode.PortableMd5)
   }
+
+  test("non-constant or mistyped k/window/portable fail naming winnow_fp and the argument") {
+    graft.plans.GraftExtensions.register(spark)
+    val docs = Seq((1L, "some text here")).toDF("doc_id", "t")
+    def err(args: String): String =
+      intercept[Exception](docs.selectExpr(s"winnow_fp(t, $args)").collect()).getMessage
+    val long = err("2L, 2, true")
+    assert(long.contains("winnow_fp") && long.contains("argument k") && long.contains("BIGINT"), long)
+    val column = err("2, length(t), true")
+    assert(column.contains("winnow_fp") && column.contains("argument window"), column)
+    val flag = err("2, 2, 'yes'")
+    assert(flag.contains("winnow_fp") && flag.contains("argument portable"), flag)
+    assert(docs.selectExpr("winnow_fp(t, 2, 2, true)").collect().head.getSeq[Long](0).nonEmpty)
+  }
 }
