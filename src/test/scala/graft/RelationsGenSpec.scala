@@ -121,23 +121,35 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("scanMentionsU8 == brute-force reference on fixture-dictionary streams and sentences") {
-    import spark.implicits._
+  test("scanMentionsU8 == scanMentions over fixture-dictionary token streams") {
     val m = model.value
     val dict = ScanReference.resolve(Vocab.dictEntries)
-    def check(toks: IndexedSeq[String]): Int = {
-      val ref = ScanReference.scan(dict, toks)
-      assert(m.scanMentionsU8(toks.map(UTF8String.fromString).toArray) == ref, s"tokens $toks")
-      ref.length
-    }
     val surfaces = dict.keys.flatMap(_.split(' ')).toVector
     val noise = Vector("xqz", "the", "of", "and", "binds")
     val pool = surfaces ++ noise
     val rng = new SplitMix64(0x5CAFFEL)
-    for (_ <- 1 to 300) check(IndexedSeq.fill(1 + rng.nextInt(15))(pool(rng.nextInt(pool.length))))
+    for (_ <- 1 to 300) {
+      val toks = IndexedSeq.fill(1 + rng.nextInt(15))(pool(rng.nextInt(pool.length)))
+      val ref = ScanReference.scan(dict, toks)
+      assert(m.scanMentions(toks) == ref, s"tokens $toks")
+      assert(m.scanMentionsU8(toks.map(UTF8String.fromString).toArray) == ref, s"tokens $toks")
+    }
+  }
+
+  test("scanMentionsU8 == brute-force reference on every fixture sentence") {
+    import spark.implicits._
+    val m = model.value
+    val dict = ScanReference.resolve(Vocab.dictEntries)
     val sentences = Stages.tokenized(Stages.sentences(Stages.pageText(
       Stages.partitioned(webpages, Seq("en"), 8)))).select($"tokens").as[Seq[String]].collect()
-    assert(sentences.map(t => check(t.toIndexedSeq)).sum > 0, "fixture must contain mentions")
+    assert(sentences.nonEmpty)
+    val seen = sentences.map { t =>
+      val toks = t.toIndexedSeq
+      val ref = ScanReference.scan(dict, toks)
+      assert(m.scanMentionsU8(toks.map(UTF8String.fromString).toArray) == ref, s"tokens $toks")
+      ref.length
+    }.sum
+    assert(seen > 0, "fixture must contain mentions")
   }
 
   test("retained scratch views throw after the next call (enforced invariant)") {
