@@ -1,7 +1,7 @@
 package graft
 
 import graft.fixtures.Gen
-import graft.kg.{KgModel, Pipeline, Stages}
+import graft.kg.{KgModel, Pipeline}
 import org.apache.spark.sql.SparkSession
 
 /** Scaling benchmark for the north rule (BASELINE.json:2,14): run the full
@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * sandbox, so cluster sizes N and 4N are substituted by local[cpus] levels
   * (driver-sanctioned, SURVEY.md §0).
   *
-  *   sbt "runMain graft.PipelineBench <cpus> <sf> [runs]"
+  *   sbt "runMain graft.PipelineBench <cpus> <sf> [runs] [p<N>] [stages] [warmsmall]"
   *
   * Prints one JSON line per run plus a median summary; BENCH/BASELINE.md
   * aggregates the two levels.
@@ -22,9 +22,6 @@ object PipelineBench {
     val sf = if (args.length > 1) args(1).toDouble else 0.1
     val runs = if (args.length > 2) args(2).toInt else 3
     val flags = args.drop(3).toSet
-    // "norepart": extract on input splits instead of the explicit url-hash
-    // exchange (quantifies the repartition's cost; SURVEY.md §4.2.1)
-    val repartitionInput = !flags.contains("norepart")
     // "p<N>": fix the partition count P (default 4*cpus). For an N-vs-4N
     // scaling pair BOTH legs must run the SAME job — same P — exactly as the
     // same application would on clusters of two sizes; letting P follow the
@@ -108,9 +105,8 @@ object PipelineBench {
       val out = java.nio.file.Files.createTempDirectory(s"bench-$cpus-$r").toString
       val (busy0, iow0, steal0) = cpuTicks()
       val t0 = System.nanoTime()
-      val rels = Stages.extractRelations(input, model, Seq("en"), parts,
-        repartitionInput)
-      val triples = Stages.mergeTriples(Stages.partialTriples(rels))
+      val triples = Pipeline.triples(spark, input, model,
+        Pipeline.Config(fixDir, out, numParts = parts))
       triples.write.mode("overwrite").parquet(s"$out/triples")
       val sec = (System.nanoTime() - t0) / 1e9
       val (busy1, iow1, steal1) = cpuTicks()

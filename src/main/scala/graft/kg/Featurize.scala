@@ -30,6 +30,11 @@ import scala.collection.mutable.ArrayBuffer
   * [weighted] marks the classes the fixture generator assigns non-zero weights
   * to (Weights.WeightedClasses) — context-independent, so the designed P/R
   * margin of FIXTURES.md 2.4 holds in any sentence context.
+  *
+  * Serving and training featurize through one token view ([[U8Toks]]) and
+  * one candidate rule ([[forEachCandidate]]). The String forms [[raw]] and
+  * [[ids]] are the independent reference the specs check both against, and
+  * what the fixture generator derives its weights from.
   */
 object Featurize {
 
@@ -112,22 +117,12 @@ object Featurize {
     suffix && utf16Length(tok) >= 4
   }
 
-  /** Token-sequence view the featurizer hashes from: either deserialized
-    * Strings (the udf/equivalence path) or raw UTF8String tokens straight off
-    * Catalyst ArrayData (the native RelationsGenExpr path — zero per-token
-    * String allocation). Both feed identical UTF-16 code units into
-    * [[StreamHash]], so feature ids are bit-equal (FeaturizeSessionSpec). */
-  sealed trait TokenVec {
-    def length: Int
-    def feed(sh: StreamHash, i: Int): StreamHash
-    def verbLike(i: Int): Boolean
-  }
-  final class StrToks(ts: scala.collection.IndexedSeq[String]) extends TokenVec {
-    def length: Int = ts.length
-    def feed(sh: StreamHash, i: Int): StreamHash = sh.feed(ts(i))
-    def verbLike(i: Int): Boolean = isVerbLike(ts(i))
-  }
-  final class U8Toks(ts: Array[UTF8String]) extends TokenVec {
+  /** The one token view the featurizer hashes from: raw UTF8String tokens,
+    * straight off Catalyst ArrayData in the native RelationsGenExpr (zero
+    * per-token String allocation) and converted once per sentence in
+    * training. [[StreamHash.feedUtf8]] feeds the same UTF-16 code units the
+    * String form would, so ids equal [[ids]] (FeaturizeSessionSpec). */
+  final class U8Toks(ts: Array[UTF8String]) {
     def length: Int = ts.length
     def feed(sh: StreamHash, i: Int): StreamHash = sh.feedUtf8(ts(i))
     // verbLike is pure per token, but the dep-chain walk re-asks it per
@@ -289,8 +284,7 @@ object Featurize {
     * building would redo the same hashing O(m²·gap) times. Emits EXACTLY the
     * ids (and order) of `ids(...)` (FeaturizeSessionSpec asserts equality on
     * the fixture corpus). */
-  final class Session(tv: TokenVec) {
-    def this(tokens: scala.collection.IndexedSeq[String]) = this(new StrToks(tokens))
+  final class Session(tv: U8Toks) {
     private val n = tv.length
     // [dir 0=F 1=R][pos]
     private val uniH = Array.ofDim[Long](2, n)
@@ -363,7 +357,7 @@ object Featurize {
     * asserts), but hashing only the pair's own window positions: for the
     * common 2-mention sentence a [[Session]]'s 8-hashes-per-position
     * precompute over the whole sentence would mostly be wasted. */
-  def pairIds(tv: TokenVec, m1: Mention, m2: Mention): Array[Long] = {
+  def pairIds(tv: U8Toks, m1: Mention, m2: Mention): Array[Long] = {
     val n = tv.length
     val forward = m1.begin <= m2.begin
     val d = if (forward) 0 else 1
@@ -403,6 +397,30 @@ object Featurize {
       k += 1
     }
     if (m == buf.length) buf else java.util.Arrays.copyOf(buf, m)
+  }
+
+  /** The one candidate rule, shared by scoring ([[KgModel.scoreRelationsTv]])
+    * and training ([[Train.candidateInstances]]): calls `f` with every
+    * ordered pair of span-disjoint mentions of distinct entities and the
+    * pair's hashed feature ids. Sentences with 3 or more mentions share one
+    * [[Session]]; the common 2-mention sentence hashes its one window
+    * directly with [[pairIds]] (identical ids either way). */
+  def forEachCandidate(tv: U8Toks, ms: scala.collection.IndexedSeq[Mention])(
+      f: (Mention, Mention, Array[Long]) => Unit): Unit = {
+    val session = if (ms.length >= 3) new Session(tv) else null
+    var a = 0
+    while (a < ms.length) {
+      var b = 0
+      while (b < ms.length) {
+        if (a != b) {
+          val m1 = ms(a); val m2 = ms(b)
+          if ((m1.end <= m2.begin || m2.end <= m1.begin) && m1.entityId != m2.entityId)
+            f(m1, m2, if (session != null) session.ids(m1, m2) else pairIds(tv, m1, m2))
+        }
+        b += 1
+      }
+      a += 1
+    }
   }
 
   /** The context-independent weighted classes of a forward planted instance of

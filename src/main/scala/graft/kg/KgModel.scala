@@ -85,8 +85,8 @@ final class KgModel(
   }
 
   /** [[scanMentionsU8]] over String tokens, returning an immutable copy
-    * (safe to retain) — for the String-token callers: training and the
-    * udf oracle. */
+    * (safe to retain) — for the String-token callers: the specs, the udf
+    * oracle and the benchmark's mention count. */
   def scanMentions(tokens: scala.collection.IndexedSeq[String]): IndexedSeq[Mention] =
     scanMentionsU8(tokens.iterator.map(UTF8String.fromString).toArray).toIndexedSeq
 
@@ -110,81 +110,60 @@ final class KgModel(
     flat
   }
 
-  /** Score every ordered, span-disjoint mention pair; emit the argmax
-    * predicate when its score clears tau (ties broken by predicate order —
-    * deterministic). One relation max per ordered pair. This wrapper copies
-    * the per-thread scratch result (`.toSeq`), so ITS return value is safe
-    * to retain; the underlying [[scoreRelationsTv]] result is not — see its
-    * scaladoc. */
+  /** [[scoreRelationsTv]] over String tokens, returning an immutable copy
+    * (safe to retain) — for the String-token callers: the specs and the udf
+    * oracle. */
   def scoreRelations(tokens: scala.collection.IndexedSeq[String], ms: IndexedSeq[Mention]): Seq[ScoredRelation] =
-    scoreRelationsTv(new Featurize.StrToks(tokens), ms).toSeq
+    scoreRelationsTv(new Featurize.U8Toks(tokens.iterator.map(UTF8String.fromString).toArray), ms).toSeq
 
-  /** Token-representation-independent scoring core: String tokens (udf path)
-    * and raw UTF8String tokens (native generator path) hash identically.
-    * Returns a [[KgModel.ScratchView]] over the per-thread
-    * [[relationScratch]] — callers either drain it before the next sentence
-    * (RelationsGenExpr) or take an immutable copy (scoreRelations' .toSeq);
-    * a view retained across a later call on the same thread throws on
-    * access. */
-  def scoreRelationsTv(tv: Featurize.TokenVec,
+  /** Score every candidate of [[Featurize.forEachCandidate]] (ordered,
+    * span-disjoint, distinct entities); emit the argmax predicate when its
+    * score clears tau (ties broken by predicate order — deterministic). One
+    * relation max per ordered pair. Returns a [[KgModel.ScratchView]] over
+    * the per-thread [[relationScratch]] — callers either drain it before the
+    * next sentence (RelationsGenExpr) or take an immutable copy
+    * (scoreRelations' .toSeq); a view retained across a later call on the
+    * same thread throws on access. */
+  def scoreRelationsTv(tv: Featurize.U8Toks,
                        ms: scala.collection.IndexedSeq[Mention]): scala.collection.Seq[ScoredRelation] =
     scoreRelationsTv(tv, ms, relationScratch.get())
 
   /** [[scoreRelationsTv]] with a caller-held scratch — see
     * [[scanMentionsU8]]'s two-arg overload for why. */
-  def scoreRelationsTv(tv: Featurize.TokenVec,
+  def scoreRelationsTv(tv: Featurize.U8Toks,
                        ms: scala.collection.IndexedSeq[Mention],
                        scratch: KgModel.Scratch[ScoredRelation]): scala.collection.Seq[ScoredRelation] = {
     if (ms.length < 2) return Nil
-    // per-sentence precomputed feature hashes pay off once they are shared
-    // across many pairs; for the common 2-mention sentence direct hashing of
-    // the single window is cheaper (identical ids either way)
-    val session = if (ms.length >= 3) new Featurize.Session(tv) else null
     val view = scratch.begin()
     val out = scratch.buf
-    var a = 0
-    while (a < ms.length) {
-      var b = 0
-      while (b < ms.length) {
-        if (a != b) {
-          val m1 = ms(a); val m2 = ms(b)
-          val disjoint = m1.end <= m2.begin || m2.end <= m1.begin
-          if (disjoint && m1.entityId != m2.entityId) {
-            val fids =
-              if (session != null) session.ids(m1, m2)
-              else Featurize.pairIds(tv, m1, m2)
-            // accumulate ALL predicates per feature from the bucket-major
-            // matrix (contiguous), then select among the type-eligible ones;
-            // per predicate the summation order over fids is unchanged, so
-            // scores are bit-identical to the predicate-major loop
-            val nP = preds.length
-            val flat = wFlat
-            val scores = new Array[Double](nP)
-            var k = 0
-            while (k < fids.length) {
-              val base = fids(k).toInt * nP
-              var q = 0
-              while (q < nP) { scores(q) += flat(base + q); q += 1 }
-              k += 1
-            }
-            var bestIdx = -1
-            var bestScore = Double.NegativeInfinity
-            var p = 0
-            while (p < nP) {
-              val pd = preds(p)
-              if (pd.subjType == m1.entType && pd.objType == m2.entType) {
-                val s = scores(p)
-                if (s > bestScore) { bestScore = s; bestIdx = p }
-              }
-              p += 1
-            }
-            if (bestIdx >= 0 && bestScore >= tau)
-              out += ScoredRelation(m1.canonical, preds(bestIdx).pred, m2.canonical, bestScore)
-          }
-        }
-        b += 1
+    val nP = preds.length
+    val flat = wFlat
+    Featurize.forEachCandidate(tv, ms) { (m1, m2, fids) =>
+      // accumulate ALL predicates per feature from the bucket-major matrix
+      // (contiguous), then select among the type-eligible ones; per
+      // predicate the summation order over fids is unchanged, so scores are
+      // bit-identical to the predicate-major loop
+      val scores = new Array[Double](nP)
+      var k = 0
+      while (k < fids.length) {
+        val base = fids(k).toInt * nP
+        var q = 0
+        while (q < nP) { scores(q) += flat(base + q); q += 1 }
+        k += 1
       }
-      a += 1
+      var bestIdx = -1
+      var bestScore = Double.NegativeInfinity
+      var p = 0
+      while (p < nP) {
+        val pd = preds(p)
+        if (pd.subjType == m1.entType && pd.objType == m2.entType) {
+          val s = scores(p)
+          if (s > bestScore) { bestScore = s; bestIdx = p }
+        }
+        p += 1
+      }
+      if (bestIdx >= 0 && bestScore >= tau)
+        out += ScoredRelation(m1.canonical, preds(bestIdx).pred, m2.canonical, bestScore)
     }
     view
   }

@@ -9,25 +9,30 @@ import org.apache.hadoop.fs.Path
 /** End-to-end KG-construction pipeline (SURVEY.md §3.2 E1).
   *
   * webpages(url, warc_ts, html, text, lang)
-  *   → filter(lang) → repartition(P, xxhash64(url))            [A1–A2]
+  *   → tag in_scope(lang) → repartition(P, xxhash64(url))      [A1–A2]
   *   → Extract.text → sentences → tokens                        [A3–A5]
   *   → mentions → candidates → featurize → score → link         [A6–A10]
+  *     (+ one lineage marker row per page)
   *   → per-part partial agg (salt = part_id, shuffle-free)      [A11 ph.1]
-  *   → global merge (the single shuffle)                        [A11 ph.2]
+  *   → global merge, markers dropped (the single shuffle)       [A11 ph.2]
   *   → bucketed (subj,pred,obj) output table                    [A12]
   * with per-part manifest checkpointing/resume [A13] and metrics [A14].
+  *
+  * [[triples]] and [[run]] run this one flow (A1–A5 is
+  * [[Stages.tokenizedPages]]), as do the streaming microbatch and training;
+  * `run` adds the part filter, the checkpoint and the bucketed write.
   */
 object Pipeline {
-  /** Run configuration. The A6 mention scan has no mode: it always takes,
-    * at each token position, the longest dictionary surface starting there,
-    * for surfaces of any token length ([[KgModel.scanMentionsU8]]). */
+  /** Run configuration. The input is always repartitioned by part_id, and
+    * the A6 mention scan has no mode: it always takes, at each token
+    * position, the longest dictionary surface starting there, for surfaces
+    * of any token length ([[KgModel.scanMentionsU8]]). */
   final case class Config(
       fixturesDir: String,
       outDir: String,
       langs: Seq[String] = Seq("en"),
       numParts: Int = 64,
-      numBuckets: Int = 16,
-      repartitionInput: Boolean = true) {
+      numBuckets: Int = 16) {
     // checked on construction, so a bad config fails before any Spark job
     require(langs.nonEmpty, "langs must not be empty")
     require(numParts >= 1, s"numParts must be >= 1, got $numParts")
@@ -53,11 +58,12 @@ object Pipeline {
         "first_url string, part_id int")
 
   /** Pure (non-checkpointed) run: webpages DataFrame in, canonical triples
-    * DataFrame out — used by tests and the harness flagship. */
+    * DataFrame out — used by tests and the harness flagship. The same flow
+    * as [[run]]; the page-marker rows are dropped by the merge. */
   def triples(spark: SparkSession, webpages: DataFrame, model: Broadcast[KgModel],
               cfg: Config): DataFrame = {
-    val rels = Stages.extractRelations(
-      webpages, model, cfg.langs, cfg.numParts, cfg.repartitionInput)
+    val rels = Stages.relations(Stages.tokenizedPages(webpages, cfg.langs, cfg.numParts),
+      model, pageMarkers = true)
     Stages.mergeTriples(Stages.partialTriples(rels))
       .select(col("subj"), col("pred"), col("obj"), col("score"),
         col("n_evidence"), col("first_url"))
@@ -119,12 +125,10 @@ object Pipeline {
         // counts and the present-part commit rule are read back from the written
         // partials — the input is scanned exactly once per run (LineageSpec
         // asserts), where round 2 paid two extra (column-pruned) input scans.
-        val part = Stages.partitionedAll(spark.read.parquet(webpagesPath), cfg.langs,
-            cfg.numParts, cfg.repartitionInput)
-          .filter(col("part_id").isin(todo: _*))
-        val rels = Stages.relations(
-          Stages.tokenized(Stages.sentencesOuter(Stages.pageText(part))),
-          model, Some(accMentions), Some(accCandidates), pageMarkers = true)
+        val toks = Stages.tokenizedPages(spark.read.parquet(webpagesPath), cfg.langs,
+          cfg.numParts, Some(todo))
+        val rels = Stages.relations(toks, model, Some(accMentions), Some(accCandidates),
+          pageMarkers = true)
 
         // dynamic partition overwrite: a rerun replaces exactly the part dirs
         // it recomputes — idempotent commits (Checkpoint scaladoc)

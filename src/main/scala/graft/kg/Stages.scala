@@ -1,83 +1,79 @@
 package graft.kg
 
-import graft.text.{Extract, TextModel}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 /** The dataflow stages of the KG pipeline (SURVEY.md §2 Table A), expressed
-  * Catalyst-first: scan/filter/partition/sentence-split/tokenize are pure
-  * built-in expressions (pushdown, pruning and whole-stage codegen apply);
-  * the only UDF islands are the three the spec sanctions (BASELINE.json:6):
-  * HTML extraction, and the fused mention-detect/featurize/score step against
-  * broadcast dictionary + weights.
+  * Catalyst-first: every stage is a built-in or native Catalyst expression
+  * (pushdown, pruning and whole-stage codegen apply), with no UDF island.
+  *
+  * There is one extraction flow, and every caller runs it: [[tokenizedPages]]
+  * (A1–A5) → [[relations]] with page markers (A6–A10) → [[partialTriples]]
+  * (A11 phase 1) → [[mergeTriples]] (A11 phase 2, which drops the markers).
   */
 object Stages {
 
-  /** A2 + explicit url-hash partitioning (BASELINE.json:6). `part_id` is the
-    * checkpoint/lineage unit; pmod(xxhash64(url), P) so assignment is stable
-    * across cluster sizes and runs. */
-  def partitioned(webpages: DataFrame, langs: Seq[String], numParts: Int,
-                  repartitionInput: Boolean = true): DataFrame = {
-    val filtered = webpages
-      .filter(col("lang").isin(langs: _*) && col("html").isNotNull)
-      .select(col("url"), col("html"),
-        pmod(xxhash64(col("url")), lit(numParts.toLong)).cast("int").as("part_id"))
-    // The repartition ships (url, html) once so extraction, checkpointing and
-    // lineage are per-partition in the reference's sense. For input already
-    // bucketed by url (or when checkpoint granularity may follow input splits)
-    // set repartitionInput=false and skip the exchange entirely.
-    if (repartitionInput) filtered.repartition(numParts, col("part_id")) else filtered
+  /** A1–A5, the one extraction flow every caller runs ([[Pipeline.run]],
+    * [[Pipeline.triples]], the streaming microbatch and training): tag and
+    * url-hash-partition every page ([[partitionedAll]]), keep only the
+    * `parts` part_ids when given, then extract text, split sentences and
+    * tokenize. Every input page keeps one anchor row, so the result feeds
+    * [[relations]] with `pageMarkers = true`; out-of-scope and barren pages
+    * carry null tokens. */
+  def tokenizedPages(webpages: DataFrame, langs: Seq[String], numParts: Int,
+                     parts: Option[Seq[Int]] = None): DataFrame = {
+    val all = partitionedAll(webpages, langs, numParts)
+    val kept = parts.fold(all)(ps => all.filter(col("part_id").isin(ps: _*)))
+    tokenized(sentencesOuter(pageText(kept)))
   }
 
-  /** A2 variant for the checkpointed run: keeps EVERY input page (so lineage
-    * page counts and the present-part commit rule need no second input scan),
-    * tagging rows with `in_scope` instead of filtering. Out-of-scope rows have
-    * their html nulled BEFORE the exchange — they ship as (url, nulls), a few
-    * bytes each, and skip extraction entirely; the heavy column crosses the
-    * shuffle only for in-scope pages, same as [[partitioned]]. */
+  /** A1–A2 as a filter: the in-scope rows of [[partitionedAll]]. Kept for
+    * the harness (q_train_labels) and the stage-level specs. */
+  def partitioned(webpages: DataFrame, langs: Seq[String], numParts: Int): DataFrame =
+    partitionedAll(webpages, langs, numParts).filter(col("in_scope"))
+
+  /** A1–A2: keeps EVERY input page (so lineage page counts and the
+    * present-part commit rule need no second input scan), tagging rows with
+    * `in_scope` instead of filtering, and repartitions them by
+    * `part_id = pmod(xxhash64(url), P)` — the checkpoint/lineage unit, stable
+    * across cluster sizes and runs. Out-of-scope rows have their html
+    * nulled BEFORE the exchange: they ship as (url, nulls), a few bytes each,
+    * and skip extraction entirely.
+    * `repartitionInput` only accepts true; the benchmark passes it by name. */
   def partitionedAll(webpages: DataFrame, langs: Seq[String], numParts: Int,
                      repartitionInput: Boolean = true): DataFrame = {
+    require(repartitionInput, "partitionedAll always repartitions by part_id")
     val inScope = col("lang").isin(langs: _*) && col("html").isNotNull
-    val tagged = webpages.select(
+    webpages.select(
       col("url"),
       when(inScope, col("html")).as("html"),
       inScope.as("in_scope"),
       pmod(xxhash64(col("url")), lit(numParts.toLong)).cast("int").as("part_id"))
-    if (repartitionInput) tagged.repartition(numParts, col("part_id")) else tagged
+      .repartition(numParts, col("part_id"))
   }
 
-  /** A3 — HTML→text, the pinned byte-identical extractor. Default path is the
-    * native Catalyst expression (codegen-fused, null-intolerant — SURVEY.md
-    * §4.3); the udf() wrapper is kept for the equivalence spec. */
-  val extractTextUdf = udf((html: Array[Byte]) => Extract.text(html))
-
+  /** A3 — HTML→text, the pinned byte-identical extractor as a native
+    * Catalyst expression (codegen-fused, null-intolerant — SURVEY.md §4.3). */
   def pageText(partitioned: DataFrame): DataFrame =
     partitioned
       .withColumn("text", graft.plans.GraftExtensions.extractText(col("html")))
       .drop("html") // other columns (e.g. in_scope) pass through
 
-  /** A4 — UDF-free sentence split: native scanner expression (array-identical
-    * to split(text, TextModel.SentenceSplitRegex) — TokenizeEquivalenceSpec)
-    * + posexplode Generator. */
+  /** A4 as a filter: the non-empty sentences of [[sentencesOuter]]. Kept
+    * for the harness (q_train_labels) and the stage-level specs. */
   def sentences(pageText: DataFrame): DataFrame =
-    pageText
-      .select(col("url"), col("part_id"),
-        posexplode(graft.plans.GraftExtensions.splitSentences(col("text")))
-          .as(Seq("sent_idx", "sent")))
-      // octet_length is O(1) (byte count) where length() walks the string
-      // counting code points — equivalent for the > 0 emptiness test, and
-      // the walk was 3.3% of executor CPU (round-4 JFR: getNumChars)
-      .filter(octet_length(col("sent")) > 0)
+    sentencesOuter(pageText).filter(col("sent").isNotNull)
 
-  /** A4 variant preserving barren pages: empty sentences are filtered INSIDE
-    * the array and the explode is OUTER, so a page with no sentences (null or
-    * empty text — e.g. an out-of-scope page in the [[partitionedAll]] flow)
-    * still yields exactly one row (null sent_idx/sent). Every page therefore
-    * has exactly one "anchor" row (sent_idx 0 or null) — the hook the
-    * page-marker lineage counting in [[relations]] rides on. Extra columns
-    * (in_scope) pass through. */
+  /** A4 — UDF-free sentence split: native scanner expression (array-identical
+    * to split(text, TextModel.SentenceSplitRegex) — TokenizeEquivalenceSpec).
+    * Empty sentences are filtered INSIDE the array and the explode is OUTER,
+    * so a page with no sentences (null or empty text — e.g. an out-of-scope
+    * page) still yields exactly one row (null sent_idx/sent). Every page
+    * therefore has exactly one "anchor" row (sent_idx 0 or null) — the hook
+    * the page-marker lineage counting in [[relations]] rides on. Extra
+    * columns (in_scope) pass through. */
   def sentencesOuter(pageText: DataFrame): DataFrame = {
     val passthrough = pageText.columns.filterNot(_ == "text").map(col).toSeq
     pageText.select(passthrough :+
@@ -110,10 +106,10 @@ object Stages {
     * approximate under task retries, see Pipeline.RunStats).
     * `mentionMode` only accepts "scan"; it stays for source compatibility.
     *
-    * pageMarkers=true (requires the [[partitionedAll]] + [[sentencesOuter]]
-    * flow upstream, which supplies `in_scope` and per-page anchor rows):
-    * appends one [[PageMarkerIn]]/[[PageMarkerOut]] row per page so page
-    * counts ride the SAME single input scan as extraction. */
+    * pageMarkers=true (requires the [[tokenizedPages]] flow upstream, which
+    * supplies `in_scope` and per-page anchor rows): appends one
+    * [[PageMarkerIn]]/[[PageMarkerOut]] row per page so page counts ride the
+    * SAME single input scan as extraction. */
   def relations(tokenized: DataFrame, model: Broadcast[KgModel],
                 accMentions: Option[LongAccumulator] = None,
                 accCandidates: Option[LongAccumulator] = None,
@@ -131,62 +127,11 @@ object Stages {
       ColumnBridge.column(gen).as(Seq("subj", "pred", "obj", "score")))
   }
 
-  /** The round-3 udf+explode implementation of [[relations]] — superseded as
-    * the production path by the native [[graft.plans.RelationsGenExpr]]
-    * Generator (zero per-token String deserialization, direct InternalRow
-    * emission), kept verbatim as the oracle for RelationsGenSpec's
-    * row-for-row equivalence assertion. */
-  def relationsUdf(tokenized: DataFrame, model: Broadcast[KgModel],
-                   accMentions: Option[LongAccumulator] = None,
-                   accCandidates: Option[LongAccumulator] = None,
-                   pageMarkers: Boolean = false): DataFrame = {
-    val scoreUdf = udf { (tokens: Seq[String], anchor: Boolean, inScope: Boolean) =>
-      val m = model.value
-      val rels: Seq[ScoredRelation] =
-        if (tokens == null || !inScope) Seq.empty
-        else {
-          // Spark hands the array column as a mutable.ArraySeq wrapper —
-          // already IndexedSeq; the old toIndexedSeq COPIED every token
-          // array once per row (~6% of executor CPU in the round-4 JFR)
-          val toks: scala.collection.IndexedSeq[String] = tokens match {
-            case is: scala.collection.IndexedSeq[String @unchecked] => is
-            case other => other.toIndexedSeq
-          }
-          val ms = m.scanMentions(toks)
-          accMentions.foreach(_.add(ms.length.toLong))
-          if (ms.length >= 2) {
-            accCandidates.foreach(_.add((ms.length.toLong * (ms.length - 1))))
-            m.scoreRelations(toks, ms)
-          } else Seq.empty[ScoredRelation]
-        }
-      if (anchor)
-        rels :+ ScoredRelation(null, if (inScope) PageMarkerIn else PageMarkerOut, null, 0.0)
-      else rels
-    }
-    val (anchorCol, inScopeCol) = markerCols(pageMarkers)
-    tokenized
-      .select(col("url"), col("part_id"),
-        explode(scoreUdf(col("tokens"), anchorCol, inScopeCol)).as("rel"))
-      .select(col("url"), col("part_id"),
-        col("rel.subj").as("subj"), col("rel.pred").as("pred"),
-        col("rel.obj").as("obj"), col("rel.score").as("score"))
-  }
-
   /** anchor: the page's single sent_idx==0 row, or its posexplode_outer null
     * row when it has no sentences — exactly one per page either way. */
   private def markerCols(pageMarkers: Boolean): (Column, Column) = (
     if (pageMarkers) coalesce(col("sent_idx") === 0, lit(true)) else lit(false),
     if (pageMarkers) col("in_scope") else lit(true))
-
-  /** End-to-end A1→A10: webpages → scored relation mentions. */
-  def extractRelations(webpages: DataFrame, model: Broadcast[KgModel],
-                       langs: Seq[String], numParts: Int,
-                       repartitionInput: Boolean = true,
-                       accMentions: Option[LongAccumulator] = None,
-                       accCandidates: Option[LongAccumulator] = None): DataFrame =
-    relations(
-      tokenized(sentences(pageText(partitioned(webpages, langs, numParts, repartitionInput)))),
-      model, accMentions, accCandidates)
 
   /** A11 phase 1 — per-part partial canonicalization. Keyed by part_id first:
     * after the explicit repartition the rows are already hash-distributed by
@@ -208,20 +153,6 @@ object Stages {
       .select(col("part_id"), col("t.subj").as("subj"), col("t.pred").as("pred"),
         col("t.obj").as("obj"), col("t.n").as("n"), col("t.score").as("score"),
         col("t.first_url").as("first_url"))
-
-  /** The declarative groupBy form of [[partialTriples]] — row-for-row
-    * equivalent (CanonicalizeSpec pins equality); kept as the equivalence
-    * oracle for the triples_agg path, exactly like Stages.relationsUdf twins
-    * RelationsGenExpr. The shipped path groups by part_id alone and folds the
-    * triple key into the [[graft.plans.TripleMap]] buffer: same groups, same
-    * measures, but Spark's per-row ObjectHashAggregate machinery (key
-    * UnsafeProjection + row murmur + LinkedHashMap probe + three interpreted
-    * updates — ~17% of executor CPU in the round-4 JFR) collapses to ~one
-    * group probe per partition. */
-  def partialTriplesGroupBy(relations: DataFrame): DataFrame =
-    relations.groupBy(col("part_id"), col("subj"), col("pred"), col("obj"))
-      .agg(count(lit(1)).as("n"), max(col("score")).as("score"),
-        graft.plans.GraftExtensions.minStr(col("url")).as("first_url"))
 
   /** A11 phase 2 — merge partials globally (the one unavoidable shuffle; all
     * measures are algebraic so partial+final loses nothing). Lineage

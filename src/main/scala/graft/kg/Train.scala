@@ -6,6 +6,7 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** In-engine scorer training (SURVEY.md §3.1 step 2 — the reference's
   * preprocess → TRAIN → predict lifecycle; BASELINE.json:6 "feature hashing" +
@@ -20,12 +21,12 @@ import org.apache.spark.sql.functions._
   * so the decision boundary is w·x = 0 and the serving threshold is tau = 0 —
   * the learned weight rows drop into [[KgModel.fromData]] unchanged.
   *
-  * Scale shape: candidate extraction is the pipeline's own narrow UDF path
-  * (per-partition, no shuffle); labeling is a broadcast left-join per
-  * predicate against the (small) gold KB; each LBFGS iteration is one
-  * treeAggregate over the candidates — linear scans, no driver-side feature
-  * matrices. The candidate frame is persisted once and shared by all
-  * predicates' fits.
+  * Scale shape: candidate extraction runs the serving flow's stages, scan,
+  * candidate rule and featurizer in one narrow UDF (per-partition, no
+  * shuffle); labeling is a broadcast left-join per predicate against the
+  * (small) gold KB; each LBFGS iteration is one treeAggregate over the
+  * candidates — linear scans, no driver-side feature matrices. The
+  * candidate frame is persisted once and shared by all predicates' fits.
   */
 object Train {
 
@@ -46,40 +47,25 @@ object Train {
   final case class PredStats(pred: String, nCand: Long, nPos: Long, nWeights: Long,
                              nIter: Int = 0, finalObjective: Double = -1.0)
 
-  /** T1 — candidate instances: one row per ordered, span-disjoint mention
-    * pair with hashed features (the train-side twin of Stages.relations:
-    * same scan + featurize code path, but emits the pair instead of scoring
-    * it). `model` only needs the dictionary (weights may be empty). */
+  /** T1 — candidate instances: one row per candidate of the serving rule
+    * ([[Featurize.forEachCandidate]]: ordered, span-disjoint, distinct
+    * entities) with its hashed features. Each sentence's tokens are
+    * converted to UTF8String once and run through the same scan
+    * ([[KgModel.scanMentionsU8]]) and featurizer as [[Stages.relations]],
+    * which emits the pair's score instead. Null tokens (out-of-scope and
+    * barren pages) give no rows. `model` only needs the dictionary (weights
+    * may be empty). */
   def candidateInstances(tokenized: DataFrame, model: Broadcast[KgModel]): DataFrame = {
     val candUdf = udf { (tokens: Seq[String]) =>
-      val m = model.value
-      val toks = if (tokens == null) IndexedSeq.empty[String] else tokens.toIndexedSeq
-      val ms = m.scanMentions(toks)
-      if (ms.length < 2) Seq.empty[CandidateInstance]
-      else {
-        val session = if (ms.length >= 3) new Featurize.Session(toks) else null
-        val out = Seq.newBuilder[CandidateInstance]
-        var a = 0
-        while (a < ms.length) {
-          var b = 0
-          while (b < ms.length) {
-            if (a != b) {
-              val m1 = ms(a); val m2 = ms(b)
-              val disjoint = m1.end <= m2.begin || m2.end <= m1.begin
-              if (disjoint && m1.entityId != m2.entityId) {
-                val fids =
-                  if (session != null) session.ids(m1, m2)
-                  else Featurize.ids(toks, m1, m2)
-                out += CandidateInstance(m1.canonical, m2.canonical,
-                  m1.entType, m2.entType, fids)
-              }
-            }
-            b += 1
-          }
-          a += 1
+      val out = Seq.newBuilder[CandidateInstance]
+      if (tokens != null) {
+        val toks = tokens.iterator.map(UTF8String.fromString).toArray
+        Featurize.forEachCandidate(new Featurize.U8Toks(toks), model.value.scanMentionsU8(toks)) {
+          (m1, m2, fids) =>
+            out += CandidateInstance(m1.canonical, m2.canonical, m1.entType, m2.entType, fids)
         }
-        out.result()
       }
+      out.result()
     }
     tokenized
       .select(explode(candUdf(col("tokens"))).as("c"))
@@ -150,15 +136,14 @@ object Train {
     } finally { cached.unpersist(); () }
   }
 
-  /** End-to-end training from a raw webpages frame: stages A1–A5 (the
-    * pipeline's own scan/extract/tokenize path) → candidates → labels → LR.
+  /** End-to-end training from a raw webpages frame: the pipeline's own
+    * A1–A5 flow ([[Stages.tokenizedPages]]) → candidates → labels → LR.
     * `dictModel` carries the dictionary only; its weights are ignored. */
   def fromCorpus(spark: SparkSession, webpages: DataFrame,
                  dictModel: Broadcast[KgModel], preds: Seq[Predicate],
                  gold: DataFrame, langs: Seq[String] = Seq("en"),
                  numParts: Int = 32, regParam: Double = 0.01): Trained = {
-    val tokenized = Stages.tokenized(Stages.sentences(Stages.pageText(
-      Stages.partitioned(webpages, langs, numParts))))
-    fit(candidateInstances(tokenized, dictModel), preds, gold, regParam)
+    fit(candidateInstances(Stages.tokenizedPages(webpages, langs, numParts), dictModel),
+      preds, gold, regParam)
   }
 }

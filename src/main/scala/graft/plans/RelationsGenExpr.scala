@@ -18,8 +18,8 @@ import scala.collection.mutable.ArrayBuffer
   * (subj, pred, obj, score) row per linked relation, plus the per-page
   * lineage marker row when `anchor` is true.
   *
-  * This replaces the round-3 `udf(...)` + `explode(...)` island
-  * (Stages.relationsUdf, kept for the equivalence spec). What the udf paid
+  * This replaces the round-3 `udf(...)` + `explode(...)` island (kept as
+  * the test-side oracle `StageOracles.relationsUdf`). What the udf paid
   * per row and this does not (the remaining ~14% of executor CPU in the
   * round-4 JFR was exactly this boundary):
   *   - ScalaUDF deserialized every token UTF8String → java String and the

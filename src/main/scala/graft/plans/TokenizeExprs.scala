@@ -27,29 +27,30 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Character.isLetter/isDigit) and slices at code-point boundaries, so a
   *    slice's bytes == the re-encoded bytes of the String substring.
   * TokenizeEquivalenceSpec fuzzes both against the java.util.regex forms. */
-/** Mutable (start,end) boundary-scratch holder: thread-confined, fetched
-  * once per task via [[TokenizeRuntime.threadBounds]] (top-level class so
-  * generated Java code can name it without a `$`). */
-final class TokenBounds {
+/** Mutable (start,end) boundary-scratch holder: confined to its `owner`
+  * thread, fetched once per task via [[TokenizeRuntime.threadBounds]]
+  * (top-level class so generated Java code can name it without a `$`). */
+final class TokenBounds(val owner: Long) {
   var a: Array[Int] = new Array[Int](512)
 }
 
 /** Thread-guarded handle to the per-thread [[TokenBounds]] scratch, for
   * codegen'd expressions: the generated class caches ONE handle, and get()
-  * re-fetches the underlying ThreadLocal only when the calling thread
-  * changes (same guard RelationsGenExpr carries) — so an instance
-  * constructed on one thread but driven from another (e.g. Python-UDF
-  * writer threads consuming a partition iterator) can never share another
-  * thread's scratch and race on its boundary array. Steady-state cost per
-  * call is one Thread.currentThread().getId compare, far below the
-  * per-call ThreadLocal map probe this construction avoids. */
+  * re-fetches the underlying ThreadLocal only when the cached holder is
+  * owned by another thread — so an instance constructed on one thread but
+  * driven from another (e.g. Python-UDF writer threads consuming a
+  * partition iterator) can never share another thread's scratch and race on
+  * its boundary array. The guard is one reference read: the owner is a
+  * final field of the holder itself, so a thread cannot pair another
+  * thread's holder with its own id. Steady-state cost per call is one
+  * Thread.currentThread().getId compare, far below the per-call ThreadLocal
+  * map probe this construction avoids. */
 final class TokenBoundsHandle {
-  private var tid: Long = -1L
   private var tb: TokenBounds = _
   def get(): TokenBounds = {
-    val t = Thread.currentThread().getId
-    if (t != tid) { tb = TokenizeRuntime.threadBounds(); tid = t }
-    tb
+    val cur = tb
+    if (cur != null && cur.owner == Thread.currentThread().getId) cur
+    else { val mine = TokenizeRuntime.threadBounds(); tb = mine; mine }
   }
 }
 
@@ -70,7 +71,7 @@ object TokenizeRuntime {
     * ThreadLocal map probing on per-sentence get()s read ~12% of executor
     * CPU in the round-5 JFR even with a static ThreadLocal. */
   private val scratch = new ThreadLocal[TokenBounds] {
-    override def initialValue(): TokenBounds = new TokenBounds
+    override def initialValue(): TokenBounds = new TokenBounds(Thread.currentThread().getId)
   }
 
   /** The calling thread's boundary scratch — fetch once per task, pass to

@@ -32,8 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * fallback for pathological per-partition key cardinality — guarded by
   * `maxEntries` (conf `spark.graft.triplesAgg.maxEntries`, default 8M): a
   * part whose distinct-triple cardinality exceeds it fails fast with a
-  * message naming the remedies (more partitions, or the
-  * Stages.partialTriplesGroupBy fallback) instead of OOMing the executor.
+  * message naming the remedies (more parts, or a larger `maxEntries`)
+  * instead of OOMing the executor.
   *
   * Score semantics match `max(score)` exactly, including nulls: a null input
   * score never updates the max, and an entry that has seen ONLY null scores
@@ -58,9 +58,8 @@ final class TripleMap(val maxEntries: Int = Int.MaxValue) {
   private def checkCapacity(): Unit =
     if (entries >= maxEntries) throw new IllegalStateException(
       s"triples_agg: per-partition distinct-triple state exceeded " +
-        s"spark.graft.triplesAgg.maxEntries=$maxEntries; repartition the " +
-        "relation stream over more parts or fall back to " +
-        "Stages.partialTriplesGroupBy (sort-based spill path)")
+        s"spark.graft.triplesAgg.maxEntries=$maxEntries; run with more parts " +
+        "(Pipeline.Config.numParts) or raise spark.graft.triplesAgg.maxEntries")
 
   def size: Int = entries
 

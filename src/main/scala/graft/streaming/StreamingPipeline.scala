@@ -9,12 +9,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Continuous-ingest twin of the batch KG pipeline (SURVEY.md §3.2 E1): a
   * `readStream` file source watches the webpages directory — newly landed
   * crawl segments are discovered per trigger — and each microbatch runs the
-  * SAME A1–A11-phase-1 stages via `foreachBatch`, writing per-batch partial
-  * triples. Every A11 measure is algebraic (sum n / max score / min_str
-  * first_url), so merging per-batch partials is EXACTLY the batch phase-2
-  * merge: [[finalizeTriples]] yields identical canonical triples no matter
-  * how the input was sliced into batches (StreamingPipelineSpec pins
-  * equality with [[Pipeline.triples]] on the same corpus).
+  * batch pipeline's one A1–A11-phase-1 flow ([[Stages.tokenizedPages]] →
+  * [[Stages.relations]] with page markers → [[Stages.partialTriples]]) via
+  * `foreachBatch`, writing per-batch partial triples; the finalize merge
+  * drops the marker rows, as [[Pipeline.triples]] does. Every A11 measure
+  * is algebraic (sum n / max score / min_str first_url), so merging
+  * per-batch partials is EXACTLY the batch phase-2 merge:
+  * [[finalizeTriples]] yields identical canonical triples no matter how the
+  * input was sliced into batches (StreamingPipelineSpec pins equality with
+  * [[Pipeline.triples]] on the same corpus).
   *
   * Exactly-once at scale: the streaming checkpoint records which input
   * files each batch consumed (the streaming analogue of the batch part-id
@@ -42,8 +45,8 @@ object StreamingPipeline {
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Stages.partialTriples(Stages.extractRelations(
-            batch, model, cfg.langs, cfg.numParts, cfg.repartitionInput))
+        Stages.partialTriples(Stages.relations(
+            Stages.tokenizedPages(batch, cfg.langs, cfg.numParts), model, pageMarkers = true))
           .withColumn("batch_id", lit(batchId))
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")

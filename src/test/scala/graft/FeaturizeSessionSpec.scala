@@ -2,12 +2,16 @@ package graft
 
 import graft.fixtures.SplitMix64
 import graft.kg.{Featurize, KgModel, Stages}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Featurize.Session must emit exactly the ids (order + multiplicity) of
   * Featurize.ids for every candidate pair — on the fixture corpus and under
   * adversarial random spans. */
 class FeaturizeSessionSpec extends AnyFunSuite with SharedSpark {
+
+  private def u8(toks: IndexedSeq[String]) =
+    new Featurize.U8Toks(toks.map(UTF8String.fromString).toArray)
 
   test("session ids == direct ids on every fixture candidate pair") {
     import spark.implicits._
@@ -21,7 +25,7 @@ class FeaturizeSessionSpec extends AnyFunSuite with SharedSpark {
       val t = toks.toIndexedSeq
       val ms = model.value.scanMentions(t)
       if (ms.length >= 2) {
-        val session = new Featurize.Session(t)
+        val session = new Featurize.Session(u8(t))
         for (a <- ms; b <- ms if a != b) {
           assert(session.ids(a, b).toSeq == Featurize.ids(t, a, b).toSeq,
             s"ids diverge for pair ($a, $b) in $t")
@@ -45,7 +49,7 @@ class FeaturizeSessionSpec extends AnyFunSuite with SharedSpark {
       }
       val m1 = mkMention(1)
       val m2 = mkMention(2)
-      val session = new Featurize.Session(toks)
+      val session = new Featurize.Session(u8(toks))
       assert(session.ids(m1, m2).toSeq == Featurize.ids(toks, m1, m2).toSeq)
       assert(session.ids(m2, m1).toSeq == Featurize.ids(toks, m2, m1).toSeq)
     }

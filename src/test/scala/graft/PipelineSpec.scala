@@ -104,36 +104,59 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
   // CanonicalizeSpec — salted two-phase == naive single groupBy
   test("salted two-phase aggregation equals naive single groupBy, and salt engages") {
     import spark.implicits._
-    val rels = Stages.extractRelations(webpages, model, Seq("en"), numParts = 16).cache()
+    val rels = Stages.relations(Stages.tokenizedPages(webpages, Seq("en"), 16), model,
+      pageMarkers = true).cache()
     val twoPhase = Stages.mergeTriples(Stages.partialTriples(rels))
       .select($"subj", $"pred", $"obj", $"n_evidence", $"score", $"first_url")
-    val naive = rels.groupBy("subj", "pred", "obj")
+    // the naive form drops the lineage marker rows (subj IS NULL), as
+    // mergeTriples does
+    val naive = rels.filter($"subj".isNotNull).groupBy("subj", "pred", "obj")
       .agg(count(lit(1)).as("n_evidence"), max($"score").as("score"),
         min($"url").as("first_url"))
       .select($"subj", $"pred", $"obj", $"n_evidence", $"score", $"first_url")
     assert(twoPhase.exceptAll(naive).isEmpty && naive.exceptAll(twoPhase).isEmpty)
     // salt engaged: phase-1 groups exceed distinct triples (hot keys spread)
-    val p1 = Stages.partialTriples(rels).count()
+    val relPartials = Stages.partialTriples(rels).filter($"subj".isNotNull)
+    val p1 = relPartials.count()
     val p2 = twoPhase.count()
     assert(p1 > p2, s"salting must spread hot keys (phase1=$p1, phase2=$p2)")
     // and the HOTTEST key itself is split across >1 phase-1 group — p1 > p2
     // alone could come from cold keys; this pins the actual skew defeat on
     // the fixture's Zipfian-hot subjects (SURVEY.md §7.4 risk 3)
-    val hotSpread = Stages.partialTriples(rels)
+    val hotSpread = relPartials
       .groupBy("subj", "pred", "obj").agg(count(lit(1)).as("salt_groups"))
       .agg(max($"salt_groups")).first().getLong(0)
     assert(hotSpread > 1,
       s"hottest triple key must spread over >1 phase-1 group (got $hotSpread)")
     // triples_agg (shipped phase 1: one TripleMap buffer per part_id) emits
     // row-for-row the groupBy form's output — including the null-subj lineage
-    // marker rows when present (none here; LineageSpec covers that flow)
+    // marker rows
+    assert(rels.filter($"subj".isNull).count() > 0)
     val mapForm = Stages.partialTriples(rels)
       .select($"part_id", $"subj", $"pred", $"obj", $"n", $"score", $"first_url")
-    val groupByForm = Stages.partialTriplesGroupBy(rels)
+    val groupByForm = StageOracles.partialTriplesGroupBy(rels)
       .select($"part_id", $"subj", $"pred", $"obj", $"n", $"score", $"first_url")
     assert(mapForm.exceptAll(groupByForm).isEmpty &&
       groupByForm.exceptAll(mapForm).isEmpty)
     rels.unpersist()
+  }
+
+  // One flow: the pure and the checkpointed run give the same triples
+  test("Pipeline.triples == the triples table Pipeline.run writes (langs = en,de)") {
+    val out = java.nio.file.Files.createTempDirectory("triples-vs-run").toString
+    val c = cfg.copy(outDir = out, langs = Seq("en", "de"))
+    Pipeline.run(spark, s"$dir/webpages.parquet", c)
+    val cols = Seq("subj", "pred", "obj", "score", "n_evidence", "first_url").map(col)
+    val written = spark.read.parquet(Pipeline.triplesPath(out)).select(cols: _*)
+    val pure = Pipeline.triples(spark, webpages, model, c).select(cols: _*)
+    assert(pure.count() > 0L && pure.count() == written.count())
+    assert(pure.exceptAll(written).isEmpty && written.exceptAll(pure).isEmpty)
+  }
+
+  test("partitionedAll rejects repartitionInput = false") {
+    intercept[IllegalArgumentException] {
+      Stages.partitionedAll(webpages, Seq("en"), 8, repartitionInput = false)
+    }
   }
 
   // PipelinePRSpec — the correctness gate

@@ -113,7 +113,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       .select(col("url"), col("html"))
     val native = df.select(col("url"),
       graft.plans.GraftExtensions.extractText(col("html")).as("t"))
-    val viaUdf = df.select(col("url"), Stages.extractTextUdf(col("html")).as("t"))
+    val viaUdf = df.select(col("url"), StageOracles.extractTextUdf(col("html")).as("t"))
     assert(native.exceptAll(viaUdf).isEmpty && viaUdf.exceptAll(native).isEmpty)
     // also callable through SQL after registration
     graft.plans.GraftExtensions.register(spark)

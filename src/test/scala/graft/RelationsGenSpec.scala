@@ -29,7 +29,7 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
     val toks = Stages.tokenized(Stages.sentences(Stages.pageText(
       Stages.partitioned(webpages, Seq("en"), 8))))
     val nat = collected(Stages.relations(toks, model))
-    val ref = collected(Stages.relationsUdf(toks, model))
+    val ref = collected(StageOracles.relationsUdf(toks, model))
     assert(nat.nonEmpty && nat == ref)
   }
 
@@ -37,7 +37,7 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
     val toks = Stages.tokenized(Stages.sentencesOuter(Stages.pageText(
       Stages.partitionedAll(webpages, Seq("en"), 8))))
     val nat = collected(Stages.relations(toks, model, pageMarkers = true))
-    val ref = collected(Stages.relationsUdf(toks, model, pageMarkers = true))
+    val ref = collected(StageOracles.relationsUdf(toks, model, pageMarkers = true))
     assert(nat == ref)
     // marker rows present for every page, in and out of scope
     assert(nat.exists(_._4 == Stages.PageMarkerIn))
@@ -107,7 +107,6 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
       val n = 2 + rng.nextInt(12)
       val toks = IndexedSeq.fill(n)(words(rng.nextInt(words.length)))
       val u8 = new Featurize.U8Toks(toks.map(UTF8String.fromString).toArray)
-      val st = new Featurize.StrToks(toks)
       def mk(id: Long) = {
         val b = rng.nextInt(n)
         Mention(id, s"c$id", if (rng.nextInt(2) == 0) "GENE" else "CHEM", b,
@@ -115,7 +114,6 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
       }
       val (m1, m2) = (mk(1), mk(2))
       val ref = Featurize.ids(toks, m1, m2).toSeq
-      assert(Featurize.pairIds(st, m1, m2).toSeq == ref)
       assert(Featurize.pairIds(u8, m1, m2).toSeq == ref)
       assert(new Featurize.Session(u8).ids(m1, m2).toSeq == ref)
     }

@@ -103,4 +103,25 @@ class TokenizeEquivalenceSpec extends AnyFunSuite with SharedSpark {
       .as[Seq[String]].collect().toSeq
     assert(tokNew == tokOld)
   }
+
+  test("TokenBoundsHandle: concurrent get() returns only the calling thread's scratch") {
+    val handle = new graft.plans.TokenBoundsHandle
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val wrong = new java.util.concurrent.atomic.AtomicLong(0L)
+    val threads = (0 until 2).map { _ =>
+      new Thread(() => {
+        val mine = graft.plans.TokenizeRuntime.threadBounds()
+        go.await()
+        var i = 0
+        while (i < 500000) {
+          if (!(handle.get() eq mine)) wrong.incrementAndGet()
+          i += 1
+        }
+      })
+    }
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join())
+    assert(wrong.get() == 0L, s"${wrong.get()} get() calls returned another thread's scratch")
+  }
 }
