@@ -33,6 +33,18 @@ final class KgModel(
     m
   }
 
+  /** Order-independent fingerprint of what scoring reads (the resolved
+    * dictionary, the predicates, every non-zero weight and tau): a wrapping
+    * sum of per-item 64-bit hashes, computed on the driver with no Spark job. */
+  lazy val fingerprint: Long = {
+    import scala.util.hashing.MurmurHash3.stringHash
+    def h(s: String): Long = (stringHash(s).toLong << 32) ^ (stringHash(s, 0x5bd1e995) & 0xffffffffL)
+    var sum = (Seq(s"tau=$tau") ++ dict.values.map(_.toString) ++ preds.map(_.toString)).map(h).sum
+    for (p <- preds.indices; w = weights(p); f <- w.indices if w(f) != 0.0)
+      sum += h(s"${preds(p).pred}/$f=${w(f)}")
+    sum
+  }
+
   def u8(s: String): UTF8String = {
     val v = outU8.get(s)
     if (v != null) v else UTF8String.fromString(s)

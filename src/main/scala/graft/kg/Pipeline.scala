@@ -2,7 +2,7 @@ package graft.kg
 
 import graft.io.TableIO
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -50,13 +50,6 @@ object Pipeline {
   def partialsPath(outDir: String) = s"$outDir/partials"
   def triplesPath(outDir: String) = s"$outDir/triples"
 
-  /** Partial-triples schema (part_id is the hive partition column). Reads use
-    * it explicitly so an empty (file-less) partials dir stays readable. */
-  val partialsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "subj string, pred string, obj string, n bigint, score double, " +
-        "first_url string, part_id int")
-
   /** Pure (non-checkpointed) run: webpages DataFrame in, canonical triples
     * DataFrame out — used by tests and the harness flagship. The same flow
     * as [[run]]; the page-marker rows are dropped by the merge. */
@@ -70,25 +63,29 @@ object Pipeline {
   }
 
   /** Checkpointed, resumable run over a webpages table on disk. Reprocesses
-    * only part_ids missing from the manifest; finalize merges all partials
-    * into the bucketed output table. Safe to re-run after any crash.
+    * only part_ids missing from the manifest, as one run of the
+    * [[Checkpoint]] protocol; finalize merges all committed partials into the
+    * bucketed output table. Safe to re-run after any crash. A run whose
+    * numParts, langs or model differ from the outDir's committed runs throws
+    * IllegalArgumentException: numParts/langs before any Spark job, the model
+    * right after it is loaded, before the input is read.
     *
-    * Spark jobs a run of 64 parts launches: 16 when it resumes with some parts
-    * left to compute, 15 on a fresh outDir (no manifest to read). Under AQE
+    * Spark jobs a run of 64 parts launches: 15 when it resumes with some parts
+    * left to compute, 14 on a fresh outDir (no manifest to read). Under AQE
     * each exchange costs one job for its map stage; a directory is listed by
     * a job only when it holds more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) entries.
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) entries,
+    * which the one or two run_id directories of a run do not.
     *  - 4, model load: one collect per fixture table (explicit schemas, so
     *    no schema-inference jobs);
     *  - 1, manifest read: one collect of every [[Checkpoint.ManifestRow]],
-    *    giving both the committed parts and their triple counts;
+    *    giving the committed parts, their run_ids and their triple counts;
     *  - 1, input schema inference (skipped when every part is committed);
     *  - 2, partials write: the url-hash exchange and the extraction +
-    *    per-part aggregation + write;
-    *  - 1, partials listing (one part_id directory per part): ONE file index
-    *    shared by the lineage aggregate and finalize;
-    *  - 2, lineage: one groupBy(part_id) gives page counts, the commit rule
-    *    and each part's triples, evidence and checksum;
+    *    per-part aggregation + write into `partials/run_id=<id>`;
+    *  - 2, lineage: one groupBy(part_id) over the run's partials gives page
+    *    counts, the commit rule and each part's triples, evidence and
+    *    checksum; its file index is the one finalize reads;
     *  - 1, manifest commit;
     *  - 2, finalize: one exchange on `bucket`, then merge + write (the
     *    merge groups by (subj, pred, obj, bucket), which the exchange
@@ -100,50 +97,43 @@ object Pipeline {
     val t0 = System.nanoTime()
     val stageListener = new StageMetricsListener
     spark.sparkContext.addSparkListener(stageListener)
-    val stats = try runWith(spark, webpagesPath, cfg, t0)
+    val (stats, runId) = try runWith(spark, webpagesPath, cfg, t0)
       finally spark.sparkContext.removeSparkListener(stageListener)
-    writeMetrics(spark, cfg.outDir, stats, stageListener.lines)
+    writeMetrics(spark, cfg.outDir, stats, runId, stageListener.lines)
     stats
   }
 
+  /** The run's stats and its run_id, if it computed any part. */
   private def runWith(spark: SparkSession, webpagesPath: String, cfg: Config,
-                      t0: Long): RunStats = {
+                      t0: Long): (RunStats, Option[Long]) = {
+    Checkpoint.requireSpec(spark, cfg.outDir, Checkpoint.configSpec(cfg))
     val model = KgModel.load(spark, cfg.fixturesDir)
-    val committedRows = Checkpoint.done(Checkpoint.manifest(spark, cfg.outDir))
+    val modelSpec = Checkpoint.modelSpec(model.value)
+    Checkpoint.requireSpec(spark, cfg.outDir, modelSpec)
+    val committedRows = Checkpoint.manifest(spark, cfg.outDir)
     val committed = committedRows.map(_.part_id).toSet
+    val runs = committedRows.map(_.run_id).distinct
     val todo = (0 until cfg.numParts).filterNot(committed.contains)
+    val runId = if (todo.isEmpty) None else Some(runs.maxOption.fold(0L)(_ + 1))
 
     val accMentions = spark.sparkContext.longAccumulator("kg.mentions")
     val accCandidates = spark.sparkContext.longAccumulator("kg.candidates")
 
-    def readPartials() = spark.read.schema(partialsSchema).parquet(partialsPath(cfg.outDir))
-    val (partials, newRows) =
-      if (todo.nonEmpty) {
-        // single-pass lineage: EVERY page (in scope or not) flows once, tagged;
-        // out-of-scope rows carry (url, nulls) only and skip extraction. Each
-        // page emits one marker row (subj IS NULL) beside its relations, so page
-        // counts and the present-part commit rule are read back from the written
-        // partials — the input is scanned exactly once per run (LineageSpec
-        // asserts), where round 2 paid two extra (column-pruned) input scans.
+    // single-pass lineage: EVERY page (in scope or not) flows once, tagged;
+    // out-of-scope rows carry (url, nulls) only and skip extraction. Each page
+    // emits one marker row (subj IS NULL) beside its relations, so page counts
+    // and the present-part commit rule are read back from the written partials
+    // — the input is scanned exactly once per run (LineageSpec asserts).
+    val (newRows, partials) = runId match {
+      case None => (Nil, Checkpoint.partials(spark, cfg.outDir, runs))
+      case Some(id) =>
         val toks = Stages.tokenizedPages(spark.read.parquet(webpagesPath), cfg.langs,
           cfg.numParts, Some(todo))
         val rels = Stages.relations(toks, model, Some(accMentions), Some(accCandidates),
           pageMarkers = true)
-
-        // dynamic partition overwrite: a rerun replaces exactly the part dirs
-        // it recomputes — idempotent commits (Checkpoint scaladoc)
-        Stages.partialTriples(rels).write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("part_id").parquet(partialsPath(cfg.outDir))
-
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        // one file index for the lineage aggregate and finalize
-        val all = readPartials()
-        val rows = Checkpoint.lineage(all.filter(col("part_id").isin(todo: _*)), wallMs)
-        Checkpoint.commit(spark, cfg.outDir, rows)
-        (Some(all), rows)
-      } else if (Checkpoint.pathExists(spark, partialsPath(cfg.outDir))) (Some(readPartials()), Nil)
-      else (None, Nil)
+        Checkpoint.commitRun(spark, cfg.outDir, Checkpoint.configSpec(cfg) ++ modelSpec, id, runs,
+          Stages.partialTriples(rels), t0)
+    }
 
     // finalize (cheap, always rerun): merge all committed partials in one
     // shuffle on the output bucket. A run whose input produced no triples
@@ -151,10 +141,7 @@ object Pipeline {
     // partitionBy write of an empty frame yields no schema-bearing files, so
     // that table is written unpartitioned instead.
     val merged = Stages.mergeTriplesBy(
-      partials.getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], partialsSchema))
-        .withColumn("bucket", Stages.subjBucket(cfg.numBuckets))
-        .repartition(col("bucket")),
+      partials.withColumn("bucket", Stages.subjBucket(cfg.numBuckets)).repartition(col("bucket")),
       col("bucket"))
       .select(TriplesColumns.map(col): _*)
     val empty = (committedRows ++ newRows).map(_.n_triples).sum == 0L
@@ -164,8 +151,8 @@ object Pipeline {
     // explicit schema: an all-empty write may contain no schema-bearing files
     val nTriples = spark.read.schema(merged.schema).parquet(triplesPath(cfg.outDir)).count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    RunStats(todo.size, committed.size, newRows.map(_.n_pages).sum,
-      accMentions.value, accCandidates.value, nTriples, wallMs)
+    (RunStats(todo.size, committed.size, newRows.map(_.n_pages).sum,
+      accMentions.value, accCandidates.value, nTriples, wallMs), runId)
   }
 
   /** Output table columns; `bucket` is the partition column of a non-empty
@@ -173,14 +160,15 @@ object Pipeline {
   private val TriplesColumns =
     Seq("subj", "pred", "obj", "n_evidence", "score", "first_url", "bucket")
 
-  /** A14 — run-level metrics log (per-partition lineage lives in _manifest),
+  /** A14 — run-level metrics log (per-partition lineage lives in _manifest;
+    * `run_id` joins a run's line to its rows, null when it computed nothing),
     * written through the outDir's Hadoop FileSystem. Object stores have no
     * append, so the log is read and rewritten whole. */
   private def writeMetrics(spark: SparkSession, outDir: String, s: RunStats,
-                           stageLines: Seq[String]): Unit = {
+                           runId: Option[Long], stageLines: Seq[String]): Unit = {
     val run = s"""{"parts_processed":${s.partsProcessed},"parts_skipped":${s.partsSkipped},""" +
       s""""pages":${s.pages},"mentions":${s.mentions},"candidates":${s.candidates},""" +
-      s""""triples":${s.triples},"wall_ms":${s.wallMs}}"""
+      s""""triples":${s.triples},"wall_ms":${s.wallMs},"run_id":${runId.getOrElse("null")}}"""
     val path = new Path(s"$outDir/metrics.jsonl")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val prev =

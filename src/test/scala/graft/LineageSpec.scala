@@ -4,7 +4,7 @@ import graft.kg.{Checkpoint, Pipeline, Stages}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   InsertIntoHadoopFsRelationCommand, LogicalRelation}
@@ -32,6 +32,14 @@ class LineageSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHel
     Pipeline.run(spark, s"${SparkKit.sf0001}/webpages.parquet",
       Pipeline.Config(SparkKit.sf0001, out, numParts = 4))
     out
+  }
+
+  /** Every query of one clean run over sf0.001 in 4 parts, with its function
+    * name, shared by the plan specs. */
+  private lazy val runQueries: Seq[(String, QueryExecution)] = {
+    val dir = SparkKit.sf0001
+    queriesOf(Pipeline.run(spark, s"$dir/webpages.parquet",
+      Pipeline.Config(dir, tmp("lineage-plan"), numParts = 4)))
   }
 
   /** Runs `body` and returns every query it ran, with its function name. */
@@ -112,8 +120,7 @@ class LineageSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHel
     val pagesPath = s"${SparkKit.sf0001}/webpages.parquet"
     val out = markersOut
 
-    val partials = spark.read.schema(Pipeline.partialsSchema)
-      .parquet(Pipeline.partialsPath(out))
+    val partials = spark.read.parquet(Pipeline.partialsPath(out))
     // markers never leak into the merged output
     val triples = spark.read.parquet(Pipeline.triplesPath(out))
     assert(triples.filter(col("subj").isNull).count() == 0L)
@@ -139,8 +146,7 @@ class LineageSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHel
 
   test("manifest lineage == an independent two-aggregate recount of the partials") {
     val out = markersOut
-    val partials = spark.read.schema(Pipeline.partialsSchema)
-      .parquet(Pipeline.partialsPath(out))
+    val partials = spark.read.parquet(Pipeline.partialsPath(out))
     // the formula the fused lineage aggregate replaced: page counts from the
     // markers, then triples/evidence/checksum from the relation rows
     val pagesByPart = partials.filter(col("subj").isNull)
@@ -165,10 +171,7 @@ class LineageSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHel
   }
 
   test("finalize: one shuffle, on bucket; partials listed once; no isEmpty query") {
-    val dir = SparkKit.sf0001
-    val out = tmp("lineage-plan")
-    val qs = queriesOf(Pipeline.run(spark, s"$dir/webpages.parquet",
-      Pipeline.Config(dir, out, numParts = 4)))
+    val qs = runQueries
 
     val triplesWrites = qs.map(_._2).filter(_.analyzed.collectFirst {
       case w: InsertIntoHadoopFsRelationCommand
@@ -193,6 +196,18 @@ class LineageSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHel
       assert(qe.analyzed.collect { case l @ (_: GlobalLimit | _: LocalLimit) => l }.isEmpty,
         s"no limit query over the partials:\n${qe.analyzed}")
     }
+  }
+
+  test("partials write: run_id is its only partition column, and it plans no Sort") {
+    val writes = runQueries.map(_._2).flatMap(qe => qe.analyzed.collectFirst {
+      case w: InsertIntoHadoopFsRelationCommand
+          if w.outputPath.toString.endsWith("/partials") => qe -> w
+    })
+    assert(writes.size == 1, s"expected one partials write, saw ${writes.size}")
+    val (qe, w) = writes.head
+    assert(w.partitionColumns.map(_.name) == Seq("run_id"))
+    val sorts = collect(qe.executedPlan) { case s: SortExec => s }
+    assert(sorts.isEmpty, s"a constant run_id partition needs no sort:\n${qe.executedPlan}")
   }
 
   test("zero-triple run + resume commits a readable table with the usual columns") {

@@ -3,18 +3,32 @@ package graft
 import graft.kg.{Pipeline, StageMetricsListener}
 import org.apache.spark.graftbridge.ListenerBusProbe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 
 /** What `Pipeline.run` promises around its dataflow: it leaves the session's
-  * conf as it found it, works on a URI-style outDir, rejects a bad config
-  * before any Spark job, and unregisters its listener even when it throws. */
+  * conf as it found it, works on a URI-style outDir, rejects a bad config —
+  * or a resume that is not the same run — before any Spark job, and
+  * unregisters its listener even when it throws. */
 class PipelineRunSpec extends AnyFunSuite with SharedSpark {
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"run-$tag").toString
 
   private val OverwriteMode = "spark.sql.sources.partitionOverwriteMode"
+
+  /** An outDir in which a run over half the input (parts 0–1 of 4) has
+    * committed; parts 2–3 are left to compute. */
+  private lazy val halfDone: String = {
+    val dir = SparkKit.sf0001
+    val half = tmp("half-input")
+    spark.read.parquet(s"$dir/webpages.parquet")
+      .filter(pmod(xxhash64(col("url")), lit(4L)) < 2).write.mode("overwrite").parquet(half)
+    val out = tmp("half")
+    Pipeline.run(spark, half, Pipeline.Config(dir, out, numParts = 4))
+    out
+  }
 
   test("Pipeline.run does not change the session's partitionOverwriteMode") {
     val dir = SparkKit.sf0001
@@ -39,10 +53,19 @@ class PipelineRunSpec extends AnyFunSuite with SharedSpark {
     assert(runs.length == 2, lines.mkString("\n"))
     assert(runs(0).startsWith("{\"parts_processed\":4,\"parts_skipped\":0,"))
     assert(runs(1).startsWith("{\"parts_processed\":0,\"parts_skipped\":4,"))
+    // run_id joins a run's line to its _manifest rows
+    assert(runs(0).endsWith(",\"run_id\":0}") && runs(1).endsWith(",\"run_id\":null}"))
   }
 
   test("a bad config throws IllegalArgumentException before any Spark job") {
     val dir = SparkKit.sf0001
+    val resumed = halfDone
+    // an outDir of the older partials/part_id= layout: a _manifest, no _run_spec
+    val oldLayout = tmp("old-layout")
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(oldLayout, "_manifest"))
+    // ... and one whose first run crashed before its manifest commit
+    val oldTorn = tmp("old-torn")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(oldTorn, "partials", "part_id=0"))
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
     val barrier = new AtomicInteger(0)
@@ -57,12 +80,21 @@ class PipelineRunSpec extends AnyFunSuite with SharedSpark {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("bad-config", "bad config")
-      val bad: Seq[() => Pipeline.Config] = Seq(
-        () => Pipeline.Config(dir, tmp("bad"), numParts = 0),
-        () => Pipeline.Config(dir, tmp("bad"), numBuckets = 0),
-        () => Pipeline.Config(dir, tmp("bad"), langs = Nil))
-      bad.foreach { cfg =>
-        intercept[IllegalArgumentException](Pipeline.run(spark, s"$dir/webpages.parquet", cfg()))
+      // each with the fragments its message must name
+      val bad: Seq[(() => Pipeline.Config, Seq[String])] = Seq(
+        (() => Pipeline.Config(dir, tmp("bad"), numParts = 0), Nil),
+        (() => Pipeline.Config(dir, tmp("bad"), numBuckets = 0), Nil),
+        (() => Pipeline.Config(dir, tmp("bad"), langs = Nil), Nil),
+        // a resume that is not the same run
+        (() => Pipeline.Config(dir, resumed, numParts = 8), Seq("numParts=4", "numParts=8")),
+        (() => Pipeline.Config(dir, resumed, langs = Seq("en", "de"), numParts = 4),
+          Seq("langs=en", "langs=de,en")),
+        (() => Pipeline.Config(dir, oldLayout, numParts = 4), Seq("_run_spec", "fresh outDir")),
+        (() => Pipeline.Config(dir, oldTorn, numParts = 4), Seq("_run_spec", "fresh outDir")))
+      bad.foreach { case (cfg, names) =>
+        val e = intercept[IllegalArgumentException](
+          Pipeline.run(spark, s"$dir/webpages.parquet", cfg()))
+        names.foreach(n => assert(e.getMessage.contains(n), e.getMessage))
       }
       // events reach a listener in order: once the barrier job is seen, every
       // job the bad runs could have started has been counted
@@ -76,6 +108,34 @@ class PipelineRunSpec extends AnyFunSuite with SharedSpark {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a resume with another model throws once the model is loaded, before the input is read") {
+    val dir = SparkKit.sf0001
+    val other = tmp("model")
+    Seq("entity_dict", "predicates", "weights").foreach { t =>
+      spark.read.parquet(s"$dir/$t.parquet").write.parquet(s"$other/$t.parquet")
+    }
+    spark.read.parquet(s"$dir/model_meta.parquet").withColumn("tau", col("tau") + 1.0)
+      .write.parquet(s"$other/model_meta.parquet")
+    // parts are left to compute, so reading the missing input would throw
+    // an AnalysisException instead
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark,
+      s"$other/no-such-input.parquet", Pipeline.Config(other, halfDone, numParts = 4)))
+    assert(e.getMessage.contains("model="), e.getMessage)
+  }
+
+  test("a resume may change numBuckets: it gives the clean table") {
+    val dir = SparkKit.sf0001
+    val cfg = Pipeline.Config(dir, halfDone, numParts = 4, numBuckets = 3)
+    val resumed = Pipeline.run(spark, s"$dir/webpages.parquet", cfg)
+    assert(resumed.partsProcessed == 2 && resumed.partsSkipped == 2)
+    val clean = tmp("buckets")
+    Pipeline.run(spark, s"$dir/webpages.parquet", cfg.copy(outDir = clean))
+    val a = spark.read.parquet(Pipeline.triplesPath(halfDone))
+    val b = spark.read.parquet(Pipeline.triplesPath(clean))
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty && a.count() > 0L)
+    assert(a.select("bucket").distinct().count() == 3L)
   }
 
   test("a run that throws unregisters its stage-metrics listener") {

@@ -3,6 +3,8 @@ package graft
 import graft.kg.{Checkpoint, Pipeline}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume semantics (SURVEY.md §2 A13, §5.2 ResumeSpec):
   * an interrupted run (simulated as a run that only saw part of the input)
@@ -13,22 +15,36 @@ class ResumeSpec extends AnyFunSuite with SharedSpark {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"resume-$tag").toString
 
-  test("interrupted + resumed run == clean run; no partition reprocessed") {
-    val dir = SparkKit.sf0001
-    val pagesPath = s"$dir/webpages.parquet"
-    val P = 8
+  private lazy val dir = SparkKit.sf0001
+  private lazy val pagesPath = s"$dir/webpages.parquet"
+  private val P = 8
+  private val cols = Seq("subj", "pred", "obj", "score", "n_evidence", "first_url")
 
-    // clean run
-    val outClean = tmp("clean")
-    Pipeline.run(spark, pagesPath, Pipeline.Config(dir, outClean, numParts = P))
-    val clean = spark.read.parquet(Pipeline.triplesPath(outClean))
+  /** The clean run's final table. */
+  private lazy val clean = {
+    val out = tmp("clean")
+    Pipeline.run(spark, pagesPath, Pipeline.Config(dir, out, numParts = P))
+    spark.read.parquet(Pipeline.triplesPath(out)).select(cols.map(col): _*)
+  }
 
-    // "crashed" run: pipeline only saw the pages of parts 0..3 before dying
-    val outR = tmp("resumed")
-    val firstHalf = tmp("input-half")
+  /** The input of a "crashed" run: the pipeline only saw the pages of parts
+    * 0..3 before dying. */
+  private lazy val firstHalf = {
+    val in = tmp("input-half")
     spark.read.parquet(pagesPath)
       .filter(pmod(xxhash64(col("url")), lit(P.toLong)).cast("int") < 4)
-      .write.mode("overwrite").parquet(firstHalf)
+      .write.mode("overwrite").parquet(in)
+    in
+  }
+
+  private def assertClean(out: String): Unit = {
+    val b = spark.read.parquet(Pipeline.triplesPath(out)).select(cols.map(col): _*)
+    assert(clean.exceptAll(b).isEmpty && b.exceptAll(clean).isEmpty,
+      "resumed final table must equal the clean run")
+  }
+
+  test("interrupted + resumed run == clean run; no partition reprocessed") {
+    val outR = tmp("resumed")
     Pipeline.run(spark, firstHalf, Pipeline.Config(dir, outR, numParts = P))
     val committedAfterCrash = Checkpoint.committedParts(spark, outR)
     assert(committedAfterCrash.nonEmpty && committedAfterCrash.forall(_ < 4))
@@ -38,14 +54,9 @@ class ResumeSpec extends AnyFunSuite with SharedSpark {
     assert(stats.partsSkipped == committedAfterCrash.size,
       "committed partitions must not be reprocessed")
 
-    val resumed = spark.read.parquet(Pipeline.triplesPath(outR))
-    val cols = Seq("subj", "pred", "obj", "score", "n_evidence", "first_url")
-    val a = clean.select(cols.map(col): _*)
-    val b = resumed.select(cols.map(col): _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "resumed final table must equal the clean run")
+    assertClean(outR)
 
-    // manifest lineage: exactly one 'done' row per part, pages add up
+    // manifest lineage: exactly one row per part, pages add up
     val manifest = spark.read.parquet(Checkpoint.manifestPath(outR))
     import spark.implicits._
     val perPart = manifest.groupBy("part_id").count().as[(Int, Long)].collect().toMap
@@ -55,8 +66,34 @@ class ResumeSpec extends AnyFunSuite with SharedSpark {
     assert(totalPages == expectedPages)
   }
 
+  test("a run that crashed in or after its partials write, before its manifest commit, is redone") {
+    val out = tmp("torn")
+    val cfg = Pipeline.Config(dir, out, numParts = P)
+    Pipeline.run(spark, firstHalf, cfg) // run 0
+    val committedAfterCrash = Checkpoint.committedParts(spark, out)
+    Pipeline.run(spark, pagesPath, cfg) // run 1
+    // what crashes before run 1's commit leave: its manifest file as a
+    // committed task of a killed manifest job, one partials file as a
+    // committed task of a killed write job, and a torn run directory
+    CrashKit.dropManifestOf(spark, out, 1L, asCommittedTask = true)
+    val root = Paths.get(Pipeline.partialsPath(out))
+    val runDir = root.resolve("run_id=1")
+    val files = Files.list(runDir).iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.size >= 2, s"run 1 wrote too few files to tear: $files")
+    CrashKit.toCommittedTask(root, files.head)
+    assert(Checkpoint.committedParts(spark, out) == committedAfterCrash)
+
+    // the next run takes run_id 1 again, clears all of that and commits
+    // each remaining part once
+    val stats = Pipeline.run(spark, pagesPath, cfg)
+    assert(stats.partsProcessed == P - committedAfterCrash.size)
+    val manifest = Checkpoint.manifest(spark, out)
+    assert(manifest.map(_.run_id).toSet == Set(0L, 1L))
+    assert(manifest.groupBy(_.part_id).values.forall(_.size == 1), s"duplicate rows: $manifest")
+    assertClean(out)
+  }
+
   test("run over input with zero in-scope pages commits a valid empty table") {
-    val dir = SparkKit.sf0001
     val out = tmp("empty")
     val stats = Pipeline.run(spark, s"$dir/webpages.parquet",
       Pipeline.Config(dir, out, langs = Seq("xx"), numParts = 4))

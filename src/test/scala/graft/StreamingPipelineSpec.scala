@@ -1,10 +1,11 @@
 package graft
 
-import graft.kg.Pipeline
+import graft.kg.{Checkpoint, Pipeline}
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** The continuous-ingest twin must equal the batch pipeline: triples from a
   * corpus streamed in as arriving files — across multiple microbatches and a
@@ -62,8 +63,8 @@ class StreamingPipelineSpec extends AnyFunSuite with SharedSpark {
         s"only-batch=${(expected -- streamed).take(3)}")
     assert(streamed.nonEmpty, "empty result would be a vacuous pass")
 
-    // the restart processed only wave2's file: batch_id partitions exist
-    // from both runs, and re-running with no new files adds nothing
+    // the restart processed only wave2's file, and re-running with no new
+    // files adds nothing
     val q3 = StreamingPipeline.start(spark, inDir.toString, model, cfg, ckpt,
       maxFilesPerTrigger = 1)
     try q3.processAllAvailable() finally q3.stop()
@@ -74,12 +75,12 @@ class StreamingPipelineSpec extends AnyFunSuite with SharedSpark {
 
   test("kill-mid-microbatch replay: same batch_id overwrite is idempotent") {
     // The sharpest edge of the exactly-once claim: a batch whose DATA landed
-    // (possibly torn) but whose checkpoint COMMIT did not. Simulated
+    // but whose streaming checkpoint COMMIT did not. Simulated
     // deterministically by deleting the last commits/<N> marker — Structured
-    // Streaming then re-runs batch N from offsets/<N> (same batch_id, same
-    // files) on restart — and by tearing that batch's partial output first.
-    // Dynamic partition overwrite must REPLACE batch_id=N wholesale, not
-    // append to the torn remains.
+    // Streaming then re-runs batch N from offsets/<N> (same batchId, same
+    // files) on restart. Twice: first with run N's manifest rows in place
+    // (the replay must be skipped), then with them removed and run N's
+    // partials torn (the replay must clear partials/run_id=N and rewrite it).
     val inDir = Files.createTempDirectory("replay_in")
     val outDir = Files.createTempDirectory("replay_out").toString
     val ckpt = Files.createTempDirectory("replay_ckpt")
@@ -90,43 +91,62 @@ class StreamingPipelineSpec extends AnyFunSuite with SharedSpark {
     val waveKey = pmod(xxhash64(col("url")), lit(3L))
     (0L until 3L).foreach(k => stage(webpages.filter(waveKey === k), inDir, s"f$k"))
 
-    val q = StreamingPipeline.start(spark, inDir.toString, model, cfg,
-      ckpt.toString, maxFilesPerTrigger = 1)
-    try q.processAllAvailable() finally q.stop()
-    val expected = StreamingPipeline.finalizeTriples(spark, outDir)
-      .collect().map(_.toSeq).toSet
-    assert(expected.nonEmpty)
-
-    // crash simulation: drop the newest commit marker...
-    val commits = Files.list(ckpt.resolve("commits")).iterator()
-    var last = -1L
-    commits.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      if (n.forall(_.isDigit)) last = math.max(last, n.toLong)
+    def runStream(): Unit = {
+      val q = StreamingPipeline.start(spark, inDir.toString, model, cfg,
+        ckpt.toString, maxFilesPerTrigger = 1)
+      try q.processAllAvailable() finally q.stop()
     }
+    def triples() = StreamingPipeline.finalizeTriples(spark, outDir).collect().map(_.toSeq).toSet
+
+    runStream()
+    val expected = triples()
+    assert(expected.nonEmpty)
+    val commits = ckpt.resolve("commits")
+    val last = Files.list(commits).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
     assert(last >= 2, s"expected >=3 committed batches, got ${last + 1}")
-    Files.delete(ckpt.resolve("commits").resolve(last.toString))
-    // the local FS keeps a checksum sidecar; a leftover .N.crc fails the
-    // replayed commit's rename
-    Files.deleteIfExists(ckpt.resolve("commits").resolve(s".$last.crc"))
-    // ...and tear that batch's landed partials (half-written output)
-    val partDir = Paths.get(StreamingPipeline.partialsPath(outDir), s"batch_id=$last")
+    def dropCommit(): Unit = {
+      Files.delete(commits.resolve(last.toString))
+      // the local FS keeps a checksum sidecar; a leftover .N.crc fails the
+      // replayed commit's rename
+      Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    }
+    // one manifest row per (run_id, part_id), and no new run ids
+    def assertCommittedOnce(): Unit = {
+      val rows = Checkpoint.manifest(spark, outDir)
+      val perKey = rows.groupBy(r => (r.run_id, r.part_id)).values.map(_.size)
+      assert(perKey.forall(_ == 1), s"duplicate manifest rows: $rows")
+      assert(rows.map(_.run_id).toSet == (0L to last).toSet)
+      val runDirs = Files.list(Paths.get(Pipeline.partialsPath(outDir))).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("run_id=")).toSet
+      assert(runDirs == (0L to last).map(n => s"run_id=$n").toSet, s"$runDirs")
+    }
+
+    // crash after run `last`'s manifest commit: the replay is skipped
+    dropCommit()
+    runStream()
+    assert(triples() == expected, "a skipped replay must not change triples")
+    assertCommittedOnce()
+
+    // crash before it: drop run `last`'s manifest file and tear its partials
+    dropCommit()
+    CrashKit.dropManifestOf(spark, outDir, last)
+    val partDir = Paths.get(Pipeline.partialsPath(outDir), s"run_id=$last")
     val torn = Files.list(partDir).filter(_.toString.endsWith(".parquet")).findFirst()
     assert(torn.isPresent, s"no data files under $partDir")
     Files.delete(torn.get())
 
-    // restart: batch `last` replays under the SAME batch_id and must rebuild
-    // its partition wholesale; no new batch ids may appear
-    val q2 = StreamingPipeline.start(spark, inDir.toString, model, cfg,
-      ckpt.toString, maxFilesPerTrigger = 1)
-    try q2.processAllAvailable() finally q2.stop()
-    val replayed = StreamingPipeline.finalizeTriples(spark, outDir)
-      .collect().map(_.toSeq).toSet
+    runStream()
+    val replayed = triples()
     assert(replayed == expected,
       s"replay changed triples: missing=${(expected -- replayed).take(3)} " +
         s"extra=${(replayed -- expected).take(3)}")
-    val batchDirs = Files.list(Paths.get(StreamingPipeline.partialsPath(outDir)))
-      .filter(_.getFileName.toString.startsWith("batch_id=")).count()
-    assert(batchDirs == last + 1, s"replay must not mint new batch ids ($batchDirs)")
+    assertCommittedOnce()
+
+    // a fresh checkpointDir would restart batch ids at 0 and skip its new
+    // input as replays of the committed runs: refused
+    val e = intercept[IllegalArgumentException](StreamingPipeline.start(spark, inDir.toString,
+      model, cfg, Files.createTempDirectory("replay_ckpt2").toString))
+    assert(e.getMessage.contains("checkpointDir"), e.getMessage)
   }
 }
