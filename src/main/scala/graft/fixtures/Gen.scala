@@ -19,9 +19,11 @@ import scala.collection.mutable.ArrayBuffer
   *   gold_triples.parquet (subj, pred, obj, n_mentions)
   *   media.parquet        (media_id, payload: real PNG bytes, width, height)
   *
-  * The `text` column is computed with the SAME pinned Extract.text the
-  * pipeline uses — in this sandbox the reference extractor is absent
-  * (SURVEY.md §0), so this column IS the byte-identical oracle. Weights are
+  * The `text` column is computed with the SAME pinned extractor the
+  * pipeline uses (Extract.text) — the reference extractor is absent
+  * (SURVEY.md §0), so this column IS the byte-identical oracle, and
+  * FixtureSpec checks it against the independent test-side reference
+  * (ExtractReference). Weights are
   * derived by featurizing each predicate template with the SAME Featurize the
   * pipeline uses, giving a designed margin that makes P/R >= 0.95 a measured,
   * non-vacuous property (FIXTURES.md 2.4).

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
   *
   * webpages(url, warc_ts, html, text, lang)
   *   → tag in_scope(lang) → repartition(P, xxhash64(url))      [A1–A2]
-  *   → Extract.text → sentences → tokens                        [A3–A5]
+  *   → Extract.textU8 → sentences → tokens                      [A3–A5]
   *   → mentions → candidates → featurize → score → link         [A6–A10]
   *     (+ one lineage marker row per page)
   *   → per-part partial agg (salt = part_id, shuffle-free)      [A11 ph.1]

@@ -54,8 +54,10 @@ object Stages {
       .repartition(numParts, col("part_id"))
   }
 
-  /** A3 — HTML→text, the pinned byte-identical extractor as a native
-    * Catalyst expression (codegen-fused, null-intolerant — SURVEY.md §4.3). */
+  /** A3 — HTML→text: the one pinned byte-identical extractor
+    * ([[graft.text.Extract.textU8]]) as a native Catalyst expression
+    * (codegen-fused, null-intolerant — SURVEY.md §4.3), checked against the
+    * test-side reference and the stored `text` column. */
   def pageText(partitioned: DataFrame): DataFrame =
     partitioned
       .withColumn("text", graft.plans.GraftExtensions.extractText(col("html")))
@@ -66,8 +68,10 @@ object Stages {
   def sentences(pageText: DataFrame): DataFrame =
     sentencesOuter(pageText).filter(col("sent").isNotNull)
 
-  /** A4 — UDF-free sentence split: native scanner expression (array-identical
-    * to split(text, TextModel.SentenceSplitRegex) — TokenizeEquivalenceSpec).
+  /** A4 — UDF-free sentence split: the one sentence scanner
+    * ([[graft.plans.TokenizeRuntime.sentences]]) as a native expression,
+    * array-identical to split(text, TextModel.SentenceSplitRegex)
+    * (TokenizeEquivalenceSpec fuzzes it against the regex form).
     * Empty sentences are filtered INSIDE the array and the explode is OUTER,
     * so a page with no sentences (null or empty text — e.g. an out-of-scope
     * page) still yields exactly one row (null sent_idx/sent). Every page
@@ -81,10 +85,12 @@ object Stages {
         s => octet_length(s) > 0)).as(Seq("sent_idx", "sent")): _*)
   }
 
-  /** A5 — UDF-free tokenization: one native scanner expression, kept as an
-    * ArrayType column (not exploded) for batching. Bit-identical to
-    * filter(split(lower(sent), TextModel.TokenSplitRegex), t => length(t) > 0)
-    * — TokenizeEquivalenceSpec asserts, incl. non-ASCII lowercasing. */
+  /** A5 — UDF-free tokenization: the one token scanner
+    * ([[graft.plans.TokenizeRuntime.tokensLower]]) as a native expression,
+    * kept as an ArrayType column (not exploded) for batching. Bit-identical
+    * to filter(split(lower(sent), TextModel.TokenSplitRegex), t => length(t) > 0)
+    * — TokenizeEquivalenceSpec fuzzes it against the regex form, incl.
+    * non-ASCII lowercasing. */
   def tokenized(sentences: DataFrame): DataFrame =
     sentences.withColumn("tokens",
       graft.plans.GraftExtensions.tokenizeLower(col("sent")))
@@ -171,7 +177,8 @@ object Stages {
         graft.plans.GraftExtensions.minStr(col("first_url")).as("first_url"))
 
   /** Generic salted two-phase aggregation, exposed for the harness
-    * (q_agg_twophase) and CanonicalizeSpec: equivalent by algebra to the
+    * (q_agg_twophase) and PipelineSpec "salted two-phase aggregation equals
+    * naive single groupBy, and salt engages": equivalent by algebra to the
     * single groupBy for algebraic measures. */
   def saltedTwoPhase(df: DataFrame, keys: Seq[String], saltExpr: Column, salts: Int)(
       aggs: (Seq[Column], Seq[Column])): DataFrame = {

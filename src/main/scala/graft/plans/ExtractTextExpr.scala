@@ -14,11 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (SURVEY.md §4.3): unlike the `udf()` wrapper it participates in
   * whole-stage codegen (defineCodeGen emits a direct static call — no encoder
   * round-trip, no closure serialization) and declares null-intolerance so
-  * Catalyst can push IsNotNull through it. Since round 4 the call lands on
-  * [[graft.text.ExtractBytes.textU8]] — the UTF-8-bytes-in/UTF-8-bytes-out
-  * twin of Extract.text (no decode/re-encode; malformed input falls back to
-  * the pinned String path; ExtractBytesSpec + ByteIdenticalSpec assert
-  * byte equality).
+  * Catalyst can push IsNotNull through it. The call lands on
+  * [[graft.text.Extract.textU8]], the one extractor (UTF-8 bytes in, UTF-8
+  * bytes out, no transcoding on valid input); PipelineSpec "byte-identical
+  * extracted text per url" and PlanAuditSpec check it against the stored
+  * `text` column and the test-side reference.
   */
 case class ExtractTextExpr(child: Expression) extends UnaryExpression {
 
@@ -32,10 +32,10 @@ case class ExtractTextExpr(child: Expression) extends UnaryExpression {
       s"extract_text requires BINARY input, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any =
-    graft.text.ExtractBytes.textU8(input.asInstanceOf[Array[Byte]])
+    graft.text.Extract.textU8(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.ExtractBytes.textU8($c)")
+    defineCodeGen(ctx, ev, c => s"graft.text.Extract.textU8($c)")
 
   override protected def withNewChildInternal(newChild: Expression): ExtractTextExpr =
     copy(child = newChild)

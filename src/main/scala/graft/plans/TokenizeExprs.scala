@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.text.Tokenize
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -8,25 +7,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen-reachable runtime for the tokenize expressions (a plain object so
-  * Scala emits static forwarders the generated Java can call, like
-  * Extract.text in ExtractTextExpr).
-  *
-  * Both scanners walk the UTF-8 BYTES and emit `fromAddress` views into the
-  * input buffer — zero decode, zero String, zero byte copies (the round-4
-  * JFR put ~10% of executor CPU in this stage's toString/substring/
-  * fromString churn). Same lifetime contract as `UnsafeRow.getUTF8String`'s
-  * zero-copy views: downstream operators copy bytes when they materialize
-  * output rows, before the input buffer can advance. Equivalence with the
-  * pinned String scanners (graft.text.Tokenize) is byte-exact:
-  *  - every sentence-boundary char ('.','!','?', the 5 ASCII ws) is a
-  *    single ASCII byte, and UTF-8 continuation/lead bytes are all >= 0x80,
-  *    so the byte walk sees exactly the chars the String walk saw;
-  *  - token runs are maximal letter/digit CODE-POINT runs — the walk
-  *    decodes each code point from its 1-4 bytes (same classification,
-  *    Character.isLetter/isDigit) and slices at code-point boundaries, so a
-  *    slice's bytes == the re-encoded bytes of the String substring.
-  * TokenizeEquivalenceSpec fuzzes both against the java.util.regex forms. */
 /** Mutable (start,end) boundary-scratch holder: confined to its `owner`
   * thread, fetched once per task via [[TokenizeRuntime.threadBounds]]
   * (top-level class so generated Java code can name it without a `$`). */
@@ -54,12 +34,54 @@ final class TokenBoundsHandle {
   }
 }
 
+/** The sentence and token scanners: the only implementation of the pinned
+  * boundaries (TextModel.SentenceSplitRegex / TokenSplitRegex), regex-free
+  * and exactly equivalent to the java.util.regex forms they replace:
+  *  - [[sentences]] == Pattern.compile("(?<=[.!?])\\s+").split(s, -1)
+  *    (Spark's split(col, re) keeps trailing empties — limit -1 — unlike
+  *    Java String.split's default);
+  *  - [[tokensLower]] == the non-empty elements of
+  *    Pattern.compile("[^\\p{L}\\p{Nd}]+").split(lower(s), -1), i.e. the
+  *    maximal runs of Unicode letter/decimal-digit CODE POINTS
+  *    (supplementary-plane letters are one token char, like the regex
+  *    treats them).
+  *
+  * A plain object so Scala emits static forwarders the generated Java can
+  * call. Both scanners walk the UTF-8 BYTES and emit `fromAddress` views into
+  * the input buffer — zero decode, zero String, zero byte copies (the
+  * round-4 JFR put ~10% of executor CPU in this stage's toString/substring/
+  * fromString churn). Same lifetime contract as `UnsafeRow.getUTF8String`'s
+  * zero-copy views: downstream operators copy bytes when they materialize
+  * output rows, before the input buffer can advance. The byte walk is exact:
+  *  - every sentence-boundary char ('.','!','?', the 5 ASCII ws) is a
+  *    single ASCII byte, and UTF-8 continuation/lead bytes are all >= 0x80,
+  *    so the byte walk sees exactly the chars a String walk would see;
+  *  - token runs are maximal letter/digit CODE-POINT runs — the walk
+  *    decodes each code point from its 1-4 bytes and slices at code-point
+  *    boundaries.
+  * TokenizeEquivalenceSpec fuzzes both against the regex forms, and the
+  * Stages A4/A5 expressions against Spark's built-in split/lower/filter. */
 object TokenizeRuntime {
 
+  // \s without UNICODE_CHARACTER_CLASS is ASCII-only: [ \t\n\x0B\f\r]
   private def isSentWsB(b: Int): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   private def isBoundaryB(b: Int): Boolean = b == '.' || b == '!' || b == '?'
+
+  /** \p{L} | \p{Nd} for ASCII, precomputed from the Character predicates
+    * themselves (the table IS the definition for cp < 128). The token scan
+    * classifies every code point of every sentence, and the generic
+    * Character.isLetter/isDigit dispatch pair on that path was 8.5% of
+    * executor CPU in the round-4 JFR profile — webtext is overwhelmingly
+    * ASCII, so the classification becomes one bounds-checked load. */
+  private val AsciiTokenCp: Array[Boolean] =
+    Array.tabulate(128)(c => Character.isLetter(c) || Character.isDigit(c))
+
+  /** \p{L} | \p{Nd} on a code point (java.util.regex category semantics). */
+  private def isTokenCp(cp: Int): Boolean =
+    if (cp < 128) AsciiTokenCp(cp)
+    else Character.isLetter(cp) || Character.isDigit(cp)
 
   /** Per-thread (start,end) boundary scratch: both scanners first collect
     * byte spans here, then allocate the output array at its EXACT size —
@@ -96,6 +118,10 @@ object TokenizeRuntime {
     new GenericArrayData(out.asInstanceOf[Array[Any]])
   }
 
+  /** Sentence split: a separator is a maximal ASCII-whitespace run whose
+    * first char immediately follows '.', '!' or '?'. Matches can never be
+    * adjacent (each needs a non-ws char before it), so empties only appear
+    * as the single trailing element Pattern.split(-1) would keep. */
   def sentences(s: UTF8String): ArrayData = sentences(s, scratch.get())
 
   def sentences(s: UTF8String, h: TokenBounds): ArrayData = {
@@ -150,7 +176,7 @@ object TokenizeRuntime {
       if (b0 >= 0x80) return tokensLowerGeneric(s, h) // non-ASCII: generic path
       val lb = if (b0 >= 'A' && b0 <= 'Z') b0 + 32 else b0
       buf(i) = lb.toByte
-      if (Tokenize.AsciiTokenCp(lb)) { if (start < 0) start = i }
+      if (AsciiTokenCp(lb)) { if (start < 0) start = i }
       else if (start >= 0) {
         if (2 * m == bounds.length) bounds = grow(h)
         bounds(2 * m) = start
@@ -188,7 +214,7 @@ object TokenizeRuntime {
       var isTok = false
       if (b0 < 0x80) {
         // ASCII fast path: table lookup, no code-point decode
-        isTok = Tokenize.AsciiTokenCp(b0)
+        isTok = AsciiTokenCp(b0)
       } else {
         var cp = b0
         if (b0 < 0xE0) {
@@ -200,7 +226,7 @@ object TokenizeRuntime {
           w = 4; cp = ((b0 & 0x07) << 18) | ((low.getByte(i + 1) & 0x3F) << 12) |
             ((low.getByte(i + 2) & 0x3F) << 6) | (low.getByte(i + 3) & 0x3F)
         }
-        isTok = Tokenize.isTokenCp(cp)
+        isTok = isTokenCp(cp)
       }
       if (isTok) { if (start < 0) start = i }
       else if (start >= 0) {

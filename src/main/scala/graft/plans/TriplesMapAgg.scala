@@ -178,8 +178,10 @@ final class TripleMap(val maxEntries: Int = Int.MaxValue) {
   * score, first_url = min url. `groupBy(part_id).agg(triples_agg(...))` +
   * explode produces EXACTLY the rows of
   * `groupBy(part_id, subj, pred, obj).agg(count, max, min_str)`
-  * (CanonicalizeSpec pins row-set equality; the measured motivation and the
-  * memory-envelope argument are on [[TripleMap]]). */
+  * (TripleMapFuzzSpec and PipelineSpec "salted two-phase aggregation equals
+  * naive single groupBy, and salt engages" pin row-set equality; the
+  * measured motivation and the memory-envelope argument are on
+  * [[TripleMap]]). */
 case class TriplesMapAgg(
     subj: Expression, pred: Expression, obj: Expression,
     score: Expression, url: Expression,

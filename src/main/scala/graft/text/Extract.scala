@@ -2,14 +2,17 @@ package graft.text
 
 import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCharsets}
 import java.nio.ByteBuffer
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Deterministic, total, locale-free HTML-to-text extraction.
+/** Deterministic, total, locale-free HTML-to-text extraction, UTF-8 bytes in
+  * → UTF-8 bytes out.
   *
-  * This function is the byte-identical contract of SURVEY.md §7.2: the fixture
-  * generator computes the `text` column of the `webpages` table with THIS
-  * function, and `ByteIdenticalSpec` asserts the pipeline recomputes it exactly
-  * (UTF-8 byte equality per url). The reference snapshot is empty (SURVEY.md
-  * §0), so this pinned spec is normative.
+  * This is the byte-identical contract of SURVEY.md §7.2: the fixture
+  * generator computes the `text` column of the `webpages` table with
+  * [[text]], the pipeline recomputes it with [[textU8]] (the same code,
+  * through graft.plans.ExtractTextExpr), and PipelineSpec "byte-identical
+  * extracted text per url" asserts the two agree per url. The reference
+  * snapshot is empty (SURVEY.md §0), so this pinned spec is normative.
   *
   * Pinned algorithm (order matters):
   *  1. Decode UTF-8 with U+FFFD replacement for malformed input (total on any
@@ -28,42 +31,36 @@ import java.nio.ByteBuffer
   *  5. Normalize whitespace: CR/CRLF -> LF; within each line collapse runs of
   *     space/tab/U+00A0 to one space and trim; drop empty lines; join with
   *     "\n".
+  *
+  * Steps 2–3 in their java.util.regex form (the scanners below have exactly
+  * these semantics; the regex engine's per-page cost dominated the
+  * pipeline's CPU profile):
+  *   noise:  (?is)<(script|style)\b[^>]*>.*?</\1[^>]*>|<!--.*?-->
+  *   tag:    (?s)<[^>]*>   → "\n" when BLOCK, "" otherwise
+  *   block:  (?is)</?(p|div|br|li|ul|ol|h[1-6]|tr|table|section|article|
+  *                   header|footer|blockquote)\b[^>]*>
+  * \b is java.util.regex's default word boundary; (?i) without UNICODE_CASE
+  * folds ASCII only (so U+017F 'ſ' does NOT match 's').
+  *
+  * Steps 2–5 run on the UTF-8 bytes: every structural character the
+  * scanners test ('<', '>', '&', ';', '-', '/', '!', CR, LF, space, tab) is a
+  * single ASCII byte, and UTF-8 continuation/lead bytes are all >= 0x80, so a
+  * byte walk sees exactly the characters a char walk over the decoded string
+  * sees; the only multi-byte cases are handled explicitly (U+00A0 line-space
+  * = C2 A0, \b word-chars and entity bodies decode their code point locally).
+  * Step 1 is the identity on strictly valid UTF-8 ([[isValidUtf8]]);
+  * anything else is decoded with replacement and re-encoded first. The JDK
+  * decoder never emits a lone surrogate, so the re-encoded bytes are valid
+  * UTF-8 and the same scanners apply.
+  *
+  * This is the only implementation; ExtractSpec, ExtractBytesSpec,
+  * StripEquivalenceSpec and FixtureSpec check it against the plain test-side
+  * reference (graft.ExtractReference: the regexes and the unfused steps).
   */
 object Extract {
-  /** The pinned step-2/3 semantics in java.util.regex form. The production
-    * path below is a hand-rolled scanner with EXACTLY these semantics
-    * (StripEquivalenceSpec fuzzes the two against each other) — the regex
-    * engine's per-page cost dominated the pipeline's CPU profile:
-    *   noise:  (?is)<(script|style)\b[^>]*>.*?</\1[^>]*>|<!--.*?-->
-    *   tag:    (?s)<[^>]*>   → "\n" when BLOCK, "" otherwise
-    *   block:  (?is)</?(p|div|br|li|ul|ol|h[1-6]|tr|table|section|article|
-    *                   header|footer|blockquote)\b[^>]*>
-    * Scanner fidelity notes: \b is java.util.regex's default ASCII word
-    * boundary; (?i) without UNICODE_CASE folds ASCII ONLY (so e.g. U+017F
-    * 'ſ' does NOT match 's' — asciiCi below preserves that). */
-  private[text] val BlockNames = Array(
+  private val BlockNames = Array(
     "p", "div", "br", "li", "ul", "ol", "h1", "h2", "h3", "h4", "h5", "h6",
     "tr", "table", "section", "article", "header", "footer", "blockquote")
-
-  /** java.util.regex's \b word-char test WITHOUT UNICODE_CHARACTER_CLASS:
-    * quirk — it is Unicode letters/digits plus '_' (Pattern.Bound uses
-    * Character.isLetterOrDigit), even though \w stays ASCII-only. */
-  private def isWordChar(c: Char): Boolean =
-    c == '_' || Character.isLetterOrDigit(c)
-
-  /** ASCII-only case-insensitive region match against a lowercase literal —
-    * the exact folding of Pattern.CASE_INSENSITIVE without UNICODE_CASE. */
-  private def asciiCi(s: String, from: Int, lit: String): Boolean = {
-    if (from < 0 || from + lit.length > s.length) return false
-    var k = 0
-    while (k < lit.length) {
-      val c = s.charAt(from + k)
-      val f = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-      if (f != lit.charAt(k)) return false
-      k += 1
-    }
-    true
-  }
 
   /** Step 1 — total UTF-8 decode. */
   def decodeUtf8(bytes: Array[Byte]): String = {
@@ -75,115 +72,43 @@ object Extract {
     catch { case _: CharacterCodingException => "" } // unreachable with REPLACE; belt+braces
   }
 
-  /** Steps 2–3 — strip markup (two passes total; fusing them would change
-    * edge semantics — noise removal can create new tag adjacencies that the
-    * tag pass must then see, e.g. "<" + "<!--x-->" + "b>"). */
-  def stripMarkup(html: String): String =
-    stripTags(stripNoise(html))
-
-  /** Step 2 — one left-to-right pass removing script/style elements and
-    * comments; leftmost alternative wins, an unclosed construct falls
-    * through (its interior is then scanned too, exactly like the regex). */
-  private def stripNoise(s: String): String = {
-    val n = s.length
-    var p = s.indexOf('<')
-    if (p < 0) return s
-    var sb: java.lang.StringBuilder = null
-    var last = 0
-    while (p >= 0) {
-      var end = -1 // exclusive end of a noise match starting at p, or -1
-      // alt 1: <(script|style)\b[^>]*>.*?</\1[^>]*>
-      val name =
-        if (asciiCi(s, p + 1, "script")) "script"
-        else if (asciiCi(s, p + 1, "style")) "style"
-        else null
-      if (name != null) {
-        val nameEnd = p + 1 + name.length
-        // \b: next char must exist and be non-word ([^>]*> needs a '>' later
-        // anyway, so end-of-input fails either way)
-        if (nameEnd < n && !isWordChar(s.charAt(nameEnd))) {
-          val openEnd = s.indexOf('>', nameEnd)
-          if (openEnd >= 0) {
-            // non-greedy close: EARLIEST "</name" (ascii-ci) with a '>' after
-            var q = openEnd + 1
-            while (end < 0 && q >= 0) {
-              q = s.indexOf('<', q)
-              if (q >= 0) {
-                if (q + 1 < n && s.charAt(q + 1) == '/' &&
-                    asciiCi(s, q + 2, name)) {
-                  val gt = s.indexOf('>', q + 2 + name.length)
-                  if (gt >= 0) end = gt + 1
-                  else q = -1 // no '>' anywhere later: alt 1 fails outright
-                } else q += 1
-              }
-            }
-          }
-        }
-      }
-      // alt 2: <!--.*?-->
-      if (end < 0 && s.regionMatches(p, "<!--", 0, 4)) {
-        val close = s.indexOf("-->", p + 4)
-        if (close >= 0) end = close + 3
-      }
-      if (end >= 0) {
-        if (sb == null) sb = new java.lang.StringBuilder(n)
-        sb.append(s, last, p)
-        last = end
-        p = if (end < n) s.indexOf('<', end) else -1
-      } else p = s.indexOf('<', p + 1)
+  /** Strict RFC-3629 UTF-8 validation: correct continuation counts, no
+    * overlongs, no surrogates, max U+10FFFF — exactly the inputs
+    * java.nio's decoder maps without any U+FFFD replacement. */
+  def isValidUtf8(b: Array[Byte]): Boolean = {
+    val n = b.length
+    var i = 0
+    while (i < n) {
+      val b0 = b(i) & 0xFF
+      if (b0 < 0x80) i += 1
+      else if (b0 >= 0xC2 && b0 <= 0xDF) {
+        if (i + 1 >= n || (b(i + 1) & 0xC0) != 0x80) return false
+        i += 2
+      } else if (b0 >= 0xE0 && b0 <= 0xEF) {
+        if (i + 2 >= n) return false
+        val b1 = b(i + 1) & 0xFF
+        val lo = if (b0 == 0xE0) 0xA0 else 0x80
+        val hi = if (b0 == 0xED) 0x9F else 0xBF
+        if (b1 < lo || b1 > hi || (b(i + 2) & 0xC0) != 0x80) return false
+        i += 3
+      } else if (b0 >= 0xF0 && b0 <= 0xF4) {
+        if (i + 3 >= n) return false
+        val b1 = b(i + 1) & 0xFF
+        val lo = if (b0 == 0xF0) 0x90 else 0x80
+        val hi = if (b0 == 0xF4) 0x8F else 0xBF
+        if (b1 < lo || b1 > hi || (b(i + 2) & 0xC0) != 0x80 || (b(i + 3) & 0xC0) != 0x80)
+          return false
+        i += 4
+      } else return false
     }
-    if (sb == null) s else { sb.append(s, last, n); sb.toString }
-  }
-
-  /** Step 3 — one left-to-right pass: every "<...>" (interior '>'-free)
-    * becomes "\n" when the tag word is block-level, "" otherwise; a '<'
-    * with no later '>' stays verbatim. */
-  private def stripTags(s: String): String = {
-    val n = s.length
-    var p = s.indexOf('<')
-    if (p < 0) return s
-    val sb = new java.lang.StringBuilder(n)
-    var last = 0
-    while (p >= 0) {
-      val gt = s.indexOf('>', p + 1)
-      if (gt < 0) p = -1 // no closing '>' left: no further tags possible
-      else {
-        sb.append(s, last, p)
-        if (isBlockTag(s, p + 1, gt)) sb.append('\n')
-        last = gt + 1
-        p = s.indexOf('<', gt + 1)
-      }
-    }
-    sb.append(s, last, n)
-    sb.toString
-  }
-
-  /** Block test over the tag interior s[start, gt): optional '/', then a
-    * maximal ASCII word run that must equal a block name (the regex \b makes
-    * the alternation equivalent to whole-word set membership). */
-  private def isBlockTag(s: String, start: Int, gt: Int): Boolean = {
-    var i = start
-    if (i < gt && s.charAt(i) == '/') i += 1
-    var j = i
-    while (j < gt && isWordChar(s.charAt(j))) j += 1
-    val len = j - i
-    if (len < 1 || len > 10) return false // longest name: "blockquote"
-    var b = 0
-    while (b < BlockNames.length) {
-      val bn = BlockNames(b)
-      if (bn.length == len && asciiCi(s, i, bn)) return true
-      b += 1
-    }
-    false
+    true
   }
 
   /** The step-4 whitelist: replacement for an entity body (the text between
     * '&' and ';'), or null when the body is not accepted and the '&' stays
-    * verbatim. Shared verbatim by decodeEntities, decodeAndNormalize and the
-    * byte path (ExtractBytes) so the three can never diverge — note the
-    * deliberate Integer.parseInt quirks (unicode digits, leading signs) are
-    * part of the pinned semantics. */
-  private[text] def entityReplacement(body: String): String = body match {
+    * verbatim. The deliberate Integer.parseInt quirks (unicode digits,
+    * leading signs) are part of the pinned semantics. */
+  private def entityReplacement(body: String): String = body match {
     case "amp"  => "&"
     case "lt"   => "<"
     case "gt"   => ">"
@@ -202,114 +127,283 @@ object Extract {
     case _ => null
   }
 
-  /** Step 4 — fixed-whitelist entity decode (single pass, no re-decode). */
-  def decodeEntities(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        var advanced = false
-        if (semi > i && semi - i <= 8) { // longest accepted body fits in 7 chars
-          val rep = entityReplacement(s.substring(i + 1, semi))
-          if (rep != null) { sb.append(rep); i = semi + 1; advanced = true }
-        }
-        if (!advanced) { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+  private final class Builder(capacity: Int) {
+    var a = new Array[Byte](math.max(capacity, 16))
+    var len = 0
+    def add(b: Byte): Unit = {
+      if (len == a.length) a = java.util.Arrays.copyOf(a, len * 2)
+      a(len) = b; len += 1
     }
-    sb.toString
+    def addRange(src: Array[Byte], from: Int, until: Int): Unit = {
+      val m = until - from
+      if (len + m > a.length)
+        a = java.util.Arrays.copyOf(a, math.max(len + m, len * 2))
+      System.arraycopy(src, from, a, len, m)
+      len += m
+    }
   }
 
-  private def isLineSpace(ch: Char): Boolean =
-    ch == ' ' || ch == '\t' || ch == '\u00A0'
+  private def indexOf(s: Array[Byte], n: Int, from: Int, target: Byte): Int = {
+    var i = math.max(from, 0)
+    while (i < n) { if (s(i) == target) return i; i += 1 }
+    -1
+  }
 
-  /** Step 5 — whitespace normalization. */
-  def normalizeWhitespace(s: String): String = {
-    val unified = s.replace("\r\n", "\n").replace('\r', '\n')
-    val out = new java.lang.StringBuilder(unified.length)
-    var lineStart = 0
-    var wroteLine = false
-    val n = unified.length
-    var i = 0
-    while (i <= n) {
-      if (i == n || unified.charAt(i) == '\n') {
-        // normalize unified[lineStart, i): collapse space runs, trim, drop if empty
-        var j = lineStart
-        var pendingSpace = false
-        var wroteChar = false
-        while (j < i) {
-          val ch = unified.charAt(j)
-          if (isLineSpace(ch)) pendingSpace = wroteChar // leading spaces dropped
-          else {
-            if (!wroteChar && wroteLine) out.append('\n') // first char of a non-empty line
-            if (pendingSpace) { out.append(' '); pendingSpace = false }
-            out.append(ch); wroteChar = true
+  /** ASCII-ci region match against a lowercase ASCII literal (the exact
+    * folding of Pattern.CASE_INSENSITIVE without UNICODE_CASE; non-ASCII
+    * bytes never fold to ASCII). */
+  private def asciiCi(s: Array[Byte], n: Int, from: Int, lit: String): Boolean = {
+    if (from < 0 || from + lit.length > n) return false
+    var k = 0
+    while (k < lit.length) {
+      val c = s(from + k) & 0xFF
+      val f = if (c >= 'A' && c <= 'Z') c + 32 else c
+      if (f != lit.charAt(k).toInt) return false
+      k += 1
+    }
+    true
+  }
+
+  /** java.util.regex's \b word-char test (without UNICODE_CHARACTER_CLASS)
+    * at byte position i, a char start: '_' or Character.isLetterOrDigit of
+    * the UTF-16 char (a quirk: \w stays ASCII-only, but Pattern.Bound uses
+    * the Unicode predicate). A 4-byte (supplementary) char is two surrogates
+    * to the regex, and surrogates are never letter-or-digit, so it is
+    * non-word here too. */
+  private def isWordCharAt(s: Array[Byte], n: Int, i: Int): Boolean = {
+    val b0 = s(i) & 0xFF
+    if (b0 < 0x80)
+      b0 == '_' || Character.isLetterOrDigit(b0.toChar)
+    else if (b0 < 0xE0) {
+      val cp = ((b0 & 0x1F) << 6) | (s(i + 1) & 0x3F)
+      Character.isLetterOrDigit(cp.toChar)
+    } else if (b0 < 0xF0) {
+      val cp = ((b0 & 0x0F) << 12) | ((s(i + 1) & 0x3F) << 6) | (s(i + 2) & 0x3F)
+      Character.isLetterOrDigit(cp.toChar)
+    } else false
+  }
+
+  /** Step 2 — one left-to-right pass removing script/style elements and
+    * comments; leftmost alternative wins, an unclosed construct falls
+    * through (its interior is then scanned too, exactly like the regex).
+    * Steps 2 and 3 stay two passes: noise removal can create new tag
+    * adjacencies that the tag pass must then see, e.g. "<" + "<!--x-->" +
+    * "b>". */
+  private def stripNoise(s: Array[Byte], n: Int): (Array[Byte], Int) = {
+    var p = indexOf(s, n, 0, '<')
+    if (p < 0) return (s, n)
+    var out: Builder = null
+    var last = 0
+    while (p >= 0) {
+      var end = -1 // exclusive end of a noise match starting at p, or -1
+      // alt 1: <(script|style)\b[^>]*>.*?</\1[^>]*>
+      val name =
+        if (asciiCi(s, n, p + 1, "script")) "script"
+        else if (asciiCi(s, n, p + 1, "style")) "style"
+        else null
+      if (name != null) {
+        val nameEnd = p + 1 + name.length
+        // \b: next char must exist and be non-word ([^>]*> needs a '>' later
+        // anyway, so end-of-input fails either way)
+        if (nameEnd < n && !isWordCharAt(s, n, nameEnd)) {
+          val openEnd = indexOf(s, n, nameEnd, '>')
+          if (openEnd >= 0) {
+            // non-greedy close: EARLIEST "</name" (ascii-ci) with a '>' after
+            var q = openEnd + 1
+            while (end < 0 && q >= 0) {
+              q = indexOf(s, n, q, '<')
+              if (q >= 0) {
+                if (q + 1 < n && s(q + 1) == '/' && asciiCi(s, n, q + 2, name)) {
+                  val gt = indexOf(s, n, q + 2 + name.length, '>')
+                  if (gt >= 0) end = gt + 1
+                  else q = -1 // no '>' anywhere later: alt 1 fails outright
+                } else q += 1
+              }
+            }
           }
-          j += 1
         }
-        if (wroteChar) wroteLine = true
-        lineStart = i + 1
       }
-      i += 1
+      // alt 2: <!--.*?-->
+      if (end < 0 && p + 3 < n && s(p + 1) == '!' && s(p + 2) == '-' && s(p + 3) == '-') {
+        // indexOf("-->", p + 4)
+        var q = p + 4
+        var close = -1 // -1 searching, -2 failed, >=0 found
+        while (close == -1 && q + 2 < n) {
+          q = indexOf(s, n, q, '-')
+          if (q < 0 || q + 2 >= n) close = -2
+          else if (s(q + 1) == '-' && s(q + 2) == '>') close = q
+          else q += 1
+        }
+        if (close >= 0) end = close + 3
+      }
+      if (end >= 0) {
+        if (out == null) out = new Builder(n)
+        out.addRange(s, last, p)
+        last = end
+        p = if (end < n) indexOf(s, n, end, '<') else -1
+      } else p = indexOf(s, n, p + 1, '<')
     }
-    out.toString
+    if (out == null) (s, n)
+    else { out.addRange(s, last, n); (out.a, out.len) }
   }
 
-  /** Steps 4+5 fused into one scan (exactly equivalent to
-    * normalizeWhitespace(decodeEntities(s)) — FusedExtractSpec asserts it):
-    * entities decode into the whitespace state machine directly, saving one
-    * full string copy per page on the hot path. */
-  def decodeAndNormalize(s: String): String = {
-    val n = s.length
-    val out = new java.lang.StringBuilder(n)
+  /** Step 3 — one left-to-right pass: every "<...>" (interior '>'-free)
+    * becomes "\n" when the tag word is block-level, "" otherwise; a '<'
+    * with no later '>' stays verbatim. */
+  private def stripTags(s: Array[Byte], n: Int): (Array[Byte], Int) = {
+    var p = indexOf(s, n, 0, '<')
+    if (p < 0) return (s, n)
+    val out = new Builder(n)
+    var last = 0
+    while (p >= 0) {
+      val gt = indexOf(s, n, p + 1, '>')
+      if (gt < 0) p = -1 // no closing '>' left: no further tags possible
+      else {
+        out.addRange(s, last, p)
+        if (isBlockTag(s, n, p + 1, gt)) out.add('\n')
+        last = gt + 1
+        p = indexOf(s, n, gt + 1, '<')
+      }
+    }
+    out.addRange(s, last, n)
+    (out.a, out.len)
+  }
+
+  private def charWidth(b0: Int): Int =
+    if (b0 < 0x80) 1 else if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3 else 4
+
+  /** Block test over the tag interior s[start, gt): optional '/', then a
+    * maximal word run that must equal a block name (the regex \b makes the
+    * alternation equivalent to whole-word set membership). The run's length
+    * is in bytes: a run holding a non-ASCII char never equals an all-ASCII
+    * block name, and for pure-ASCII runs bytes and chars coincide. */
+  private def isBlockTag(s: Array[Byte], n: Int, start: Int, gt: Int): Boolean = {
+    var i = start
+    if (i < gt && s(i) == '/') i += 1
+    var j = i
+    while (j < gt && isWordCharAt(s, n, j)) j += charWidth(s(j) & 0xFF)
+    val len = j - i
+    if (len < 1 || len > 10) return false // longest name: "blockquote"
+    var b = 0
+    while (b < BlockNames.length) {
+      val bn = BlockNames(b)
+      if (bn.length == len && asciiCi(s, n, i, bn)) return true
+      b += 1
+    }
+    false
+  }
+
+  /** Steps 4+5 fused into one scan: entities decode into the line/space
+    * state machine directly, saving one full copy per page. An entity body
+    * is decoded to a (tiny, rare) String for [[entityReplacement]], and the
+    * 8-char distance limit from '&' to ';' counts CHARS, so the walk counts
+    * char starts while scanning for ';'. */
+  private def decodeAndNormalize(s: Array[Byte], n: Int): (Array[Byte], Int) = {
+    val out = new Builder(n)
     var pendingSpace = false
     var wroteChar = false   // a non-space char written on the current line
     var wroteLine = false   // any non-empty line written so far
     var pendingNewline = false
 
-    def emit(ch: Char): Unit = {
-      if (ch == '\n' || ch == '\r') {
-        if (wroteChar) pendingNewline = true
-        wroteChar = false
-        pendingSpace = false
-      } else if (isLineSpace(ch)) {
-        pendingSpace = wroteChar
+    def emitNewline(): Unit = {
+      if (wroteChar) pendingNewline = true
+      wroteChar = false
+      pendingSpace = false
+    }
+    def emitSpace(): Unit = pendingSpace = wroteChar // leading spaces dropped
+    def emitRegularFirst(b: Byte): Unit = {
+      if (!wroteChar && wroteLine && pendingNewline) { out.add('\n'); pendingNewline = false }
+      if (pendingSpace) { out.add(' '); pendingSpace = false }
+      out.add(b)
+      wroteChar = true
+      wroteLine = true
+    }
+    /** Route a decoded entity char through the same classification as an
+      * input char, encoding it to UTF-8. */
+    def emitChar(c: Char): Unit = {
+      if (c == '\n' || c == '\r') emitNewline()
+      else if (c == ' ' || c == '\t' || c == '\u00A0') emitSpace()
+      else if (c < 0x80) emitRegularFirst(c.toByte)
+      else if (c < 0x800) {
+        emitRegularFirst((0xC0 | (c >> 6)).toByte)
+        out.add((0x80 | (c & 0x3F)).toByte)
       } else {
-        if (!wroteChar && wroteLine && pendingNewline) { out.append('\n'); pendingNewline = false }
-        if (pendingSpace) { out.append(' '); pendingSpace = false }
-        out.append(ch)
-        wroteChar = true
-        wroteLine = true
+        emitRegularFirst((0xE0 | (c >> 12)).toByte)
+        out.add((0x80 | ((c >> 6) & 0x3F)).toByte)
+        out.add((0x80 | (c & 0x3F)).toByte)
       }
     }
 
     var i = 0
     while (i < n) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
+      val b0 = s(i) & 0xFF
+      if (b0 == '&') {
+        // first ';' — usable only when its char distance from '&' is <= 8
+        // (the longest accepted body fits in 7 chars)
+        var semi = -1
+        var d = 0
+        var j = i + 1
+        while (semi < 0 && j < n && d <= 8) {
+          if ((s(j) & 0xC0) != 0x80) {
+            d += 1
+            if (s(j) == ';' && d <= 8) semi = j
+          }
+          j += 1
+        }
         var advanced = false
-        if (semi > i && semi - i <= 8) {
-          val rep = entityReplacement(s.substring(i + 1, semi))
+        if (semi > i) {
+          val body = new String(s, i + 1, semi - i - 1, StandardCharsets.UTF_8)
+          val rep = entityReplacement(body)
           if (rep != null) {
             var k = 0
-            while (k < rep.length) { emit(rep.charAt(k)); k += 1 }
-            i = semi + 1; advanced = true
+            while (k < rep.length) { emitChar(rep.charAt(k)); k += 1 }
+            i = semi + 1
+            advanced = true
           }
         }
-        if (!advanced) { emit(c); i += 1 }
-      } else if (c == '\r') {
+        if (!advanced) { emitRegularFirst('&'); i += 1 }
+      } else if (b0 == '\r') {
         // CR and CRLF both normalize to one line break
-        if (i + 1 < n && s.charAt(i + 1) == '\n') i += 1
-        emit('\n'); i += 1
-      } else { emit(c); i += 1 }
+        if (i + 1 < n && s(i + 1) == '\n') i += 1
+        emitNewline(); i += 1
+      } else if (b0 == '\n') { emitNewline(); i += 1 }
+      else if (b0 == ' ' || b0 == '\t') { emitSpace(); i += 1 }
+      else if (b0 == 0xC2) {
+        if (i + 1 < n && (s(i + 1) & 0xFF) == 0xA0) { emitSpace(); i += 2 }
+        else {
+          // 0xC2 leading a non-NBSP char: regular 2-byte char
+          emitRegularFirst(s(i))
+          if (i + 1 < n) out.add(s(i + 1))
+          i += 2
+        }
+      } else {
+        // batch the whole run of regular bytes up to the next special byte:
+        // per-char state transitions after the first are identity (flags
+        // already non-pending), so one flush + one arraycopy is equivalent
+        emitRegularFirst(s(i))
+        var r = i + 1
+        while (r < n && {
+          val b = s(r) & 0xFF
+          b != '&' && b != '\r' && b != '\n' && b != ' ' && b != '\t' && b != 0xC2
+        }) r += 1
+        out.addRange(s, i + 1, r)
+        i = r
+      }
     }
-    out.toString
+    (out.a, out.len)
   }
 
-  /** The pinned end-to-end extraction. Total: never throws on any input. */
-  def text(html: Array[Byte]): String =
-    decodeAndNormalize(stripMarkup(decodeUtf8(html)))
+  /** The pinned end-to-end extraction, UTF-8 bytes → UTF8String. Total:
+    * never throws on any input. */
+  def textU8(html: Array[Byte]): UTF8String = {
+    if (html == null) return UTF8String.EMPTY_UTF8
+    val valid = if (isValidUtf8(html)) html else decodeUtf8(html).getBytes(StandardCharsets.UTF_8)
+    val (a1, n1) = stripNoise(valid, valid.length)
+    val (a2, n2) = stripTags(a1, n1)
+    val (a3, n3) = decodeAndNormalize(a2, n2)
+    UTF8String.fromBytes(a3, 0, n3)
+  }
+
+  /** [[textU8]] as a String: the fixture generator's `text` column. */
+  def text(html: Array[Byte]): String = textU8(html).toString
 }

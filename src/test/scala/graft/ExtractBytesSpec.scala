@@ -1,20 +1,21 @@
 package graft
 
 import graft.fixtures.{Gen, SplitMix64}
-import graft.text.{Extract, ExtractBytes}
+import graft.text.Extract
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
 
-/** Differential: the byte-level extractor must be UTF-8-byte-identical to
-  * the pinned String pipeline on EVERY input — fixture corpus, handpicked
-  * entity/markup edges, unicode fuzz, and malformed-byte fuzz (where it
-  * must take the String-path fallback). */
+/** Differential: the byte-level extractor [[Extract.textU8]] must be
+  * UTF-8-byte-identical to the plain [[ExtractReference]] on EVERY input —
+  * fixture corpus, handpicked entity/markup edges, unicode fuzz, and
+  * malformed-byte fuzz (which it decodes with replacement and re-encodes
+  * before scanning). */
 class ExtractBytesSpec extends AnyFunSuite {
 
   private def check(bytes: Array[Byte], label: => String): Unit = {
-    val ref = UTF8String.fromString(Extract.text(bytes))
-    val got = ExtractBytes.textU8(bytes)
+    val ref = UTF8String.fromString(ExtractReference.text(bytes))
+    val got = Extract.textU8(bytes)
     assert(got == ref, s"divergence on $label")
   }
 
@@ -91,9 +92,9 @@ class ExtractBytesSpec extends AnyFunSuite {
       // (EF BF BD itself is valid input), so round-tripping == validity
       val decoded = new String(b, StandardCharsets.UTF_8)
       val roundTrips = java.util.Arrays.equals(decoded.getBytes(StandardCharsets.UTF_8), b)
-      assert(ExtractBytes.isValidUtf8(b) == roundTrips,
+      assert(Extract.isValidUtf8(b) == roundTrips,
         s"validation mismatch on ${b.map(x => f"$x%02x").mkString(" ")}")
-      if (ExtractBytes.isValidUtf8(b)) validSeen += 1
+      if (Extract.isValidUtf8(b)) validSeen += 1
     }
     assert(validSeen > 500, s"fuzz produced too few valid arrays ($validSeen)")
   }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
 
 /** Unit + property tests for the pinned byte-identical extractor
-  * (SURVEY.md §5.2 ExtractSpec, §7.2 contract). Fuzzing is a deterministic
+  * (SURVEY.md §5.2 ExtractSpec, §7.2 contract); the fuzz tests also compare
+  * it with the plain [[ExtractReference]]. Fuzzing is a deterministic
   * SplitMix64 loop (the scalatest/scalacheck bridge is not in the offline
   * cache, and determinism is a fixture invariant anyway). */
 class ExtractSpec extends AnyFunSuite {
@@ -67,19 +68,20 @@ class ExtractSpec extends AnyFunSuite {
       val a = Extract.text(bytes) // must not throw
       val b = Extract.text(bytes.clone())
       assert(a == b)
+      assert(a == ExtractReference.text(bytes))
       assert(!a.contains('\r') && !a.contains('\t'))
     }
   }
 
-  test("fused decodeAndNormalize == normalizeWhitespace∘decodeEntities (fuzz)") {
+  test("fused entity decode + whitespace steps == the unfused reference (fuzz)") {
     val rng = new SplitMix64(0xF05EDL)
     val frags = Vector("a", "b c", "&amp;", "&#13;", "&#10;", "&nbsp;", "&#9;", "&bogus;",
       " ", "  ", "\t", "\n", "\r\n", "\r", "&", ";", "&#x41;", "word", ".", "&#xD800;")
     for (_ <- 1 to 3000) {
       val s = (0 until rng.nextInt(24)).map(_ => frags(rng.nextInt(frags.length))).mkString
-      val fused = Extract.decodeAndNormalize(s)
-      val twoStep = Extract.normalizeWhitespace(Extract.decodeEntities(s))
-      assert(fused == twoStep, s"divergence on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
+      val bytes = s.getBytes(StandardCharsets.UTF_8)
+      assert(Extract.text(bytes) == ExtractReference.text(bytes),
+        s"divergence on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.fixtures.{Gen, Vocab}
 import graft.kg.Featurize
-import graft.text.Extract
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,12 +34,15 @@ class FixtureSpec extends AnyFunSuite with SharedSpark {
     val n = pages.count()
     assert(n == 500L)
 
-    // inv.2 — stored text IS Extract.text(html), byte-for-byte (UTF-8)
+    // inv.2 — stored text IS the pinned extraction of html, byte-for-byte
+    // (UTF-8); checked against the independent reference, since the
+    // generator writes it with the shipped Extract.text
     val mismatches = pages.select($"url", $"html", $"text").as[(String, Array[Byte], String)]
       .filter { case (_, html, text) =>
-        !java.util.Arrays.equals(Extract.text(html).getBytes("UTF-8"), text.getBytes("UTF-8"))
+        !java.util.Arrays.equals(ExtractReference.text(html).getBytes("UTF-8"),
+          text.getBytes("UTF-8"))
       }.count()
-    assert(mismatches == 0L, "text column must equal Extract.text(html) for every url")
+    assert(mismatches == 0L, "text column must equal ExtractReference.text(html) for every url")
 
     // urls unique; langs in range
     assert(pages.select("url").distinct().count() == n)

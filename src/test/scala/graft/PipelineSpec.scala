@@ -2,7 +2,6 @@ package graft
 
 import graft.fixtures.{Gen, Vocab}
 import graft.kg._
-import graft.text.Extract
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +17,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
   private lazy val model = KgModel.load(spark, dir)
   private lazy val cfg = Pipeline.Config(dir, outDir = "", numParts = 16)
 
-  // ByteIdenticalSpec — pipeline-recomputed text == stored text, per url
+  // pipeline-recomputed text == stored text, per url (FixtureSpec inv.2
+  // checks the stored text against ExtractReference)
   test("byte-identical extracted text per url (pipeline vs oracle column)") {
     import spark.implicits._
     val recomputed = Stages.pageText(
@@ -101,7 +101,6 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(got == expected)
   }
 
-  // CanonicalizeSpec — salted two-phase == naive single groupBy
   test("salted two-phase aggregation equals naive single groupBy, and salt engages") {
     import spark.implicits._
     val rels = Stages.relations(Stages.tokenizedPages(webpages, Seq("en"), 16), model,

@@ -1,7 +1,6 @@
 package graft
 
 import graft.kg.{KgModel, ScoredRelation, Stages}
-import graft.text.Extract
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   * through a plainer path (a Scala udf over Strings, a declarative groupBy). */
 object StageOracles {
 
-  /** [[graft.plans.GraftExtensions.extractText]] as a udf over the pinned
-    * String extractor [[Extract.text]] (PlanAuditSpec). */
-  val extractTextUdf = udf((html: Array[Byte]) => Extract.text(html))
+  /** [[graft.plans.GraftExtensions.extractText]] as a udf over the plain
+    * reference extractor [[ExtractReference.text]] (PlanAuditSpec). */
+  val extractTextUdf = udf((html: Array[Byte]) => ExtractReference.text(html))
 
   /** The round-3 udf+explode form of [[Stages.relations]]: the same scan,
     * candidate rule and scorer over String tokens, with the page-marker rows
@@ -50,7 +49,8 @@ object StageOracles {
 
   /** The declarative groupBy form of [[Stages.partialTriples]]: same groups
     * and measures, including the null-subj lineage marker rows
-    * (CanonicalizeSpec, TripleMapFuzzSpec). */
+    * (PipelineSpec "salted two-phase aggregation equals naive single
+    * groupBy, and salt engages", TripleMapFuzzSpec). */
   def partialTriplesGroupBy(relations: DataFrame): DataFrame =
     relations.groupBy(col("part_id"), col("subj"), col("pred"), col("obj"))
       .agg(count(lit(1)).as("n"), max(col("score")).as("score"),

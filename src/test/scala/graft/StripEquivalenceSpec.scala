@@ -3,39 +3,20 @@ package graft
 import graft.fixtures.SplitMix64
 import graft.text.Extract
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.regex.Pattern
+import java.nio.charset.StandardCharsets
 
-/** Differential test: Extract.stripMarkup's hand-rolled scanners vs the
-  * pinned java.util.regex reference semantics (SURVEY.md §7.2 steps 2–3,
-  * quoted in Extract's scaladoc). The regex form lives HERE as the oracle;
-  * production uses the scanner, which must match char-for-char on every
-  * input — including the ASCII-only case-folding and word-boundary edge
-  * cases of Pattern.CASE_INSENSITIVE without UNICODE_CASE. */
+/** Differential test of markup stripping (steps 2–3): the shipped
+  * extractor vs [[ExtractReference]], whose steps 2–3 are the pinned
+  * java.util.regex forms quoted in Extract's scaladoc. They must match on
+  * every input — including the ASCII-only case-folding and word-boundary
+  * edge cases of Pattern.CASE_INSENSITIVE without UNICODE_CASE. */
 class StripEquivalenceSpec extends AnyFunSuite {
 
-  private val NoiseRe = Pattern.compile(
-    "(?is)<(script|style)\\b[^>]*>.*?</\\1[^>]*>|<!--.*?-->")
-  private val TagRe = Pattern.compile("(?s)<[^>]*>")
-  private val BlockRe = Pattern.compile(
-    "(?is)</?(?:p|div|br|li|ul|ol|h[1-6]|tr|table|section|article|header|footer|blockquote)\\b[^>]*>")
-
-  private def referenceStrip(html: String): String = {
-    val noNoise = NoiseRe.matcher(html).replaceAll("")
-    val m = TagRe.matcher(noNoise)
-    val sb = new java.lang.StringBuilder(noNoise.length)
-    var last = 0
-    while (m.find()) {
-      sb.append(noNoise, last, m.start())
-      if (BlockRe.matcher(m.group()).matches()) sb.append('\n')
-      last = m.end()
-    }
-    sb.append(noNoise, last, noNoise.length)
-    sb.toString
-  }
-
-  private def check(s: String): Unit =
-    assert(Extract.stripMarkup(s) == referenceStrip(s),
+  private def check(s: String): Unit = {
+    val bytes = s.getBytes(StandardCharsets.UTF_8)
+    assert(Extract.text(bytes) == ExtractReference.text(bytes),
       s"divergence on <<${s.map(c => if (c >= ' ' && c < 127) c.toString else f"\\u${c.toInt}%04x").mkString}>>")
+  }
 
   test("handpicked edge cases match the regex reference") {
     val cases = Seq(

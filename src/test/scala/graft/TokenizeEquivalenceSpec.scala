@@ -1,13 +1,17 @@
 package graft
 
 import graft.fixtures.{Gen, SplitMix64}
-import graft.text.{Extract, TextModel, Tokenize}
+import graft.plans.TokenizeRuntime
+import graft.text.{Extract, TextModel}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.regex.Pattern
 
-/** Differential tests for the hand-rolled sentence/token scanners against
-  * the pinned regex semantics (TextModel), at two levels:
-  *  1. pure JVM: Tokenize.* vs Pattern.split(s, -1) on fuzz + edge inputs;
+/** Differential tests for the shipped sentence/token scanners
+  * (TokenizeRuntime) against the pinned regex semantics (TextModel), at two
+  * levels:
+  *  1. pure JVM: TokenizeRuntime.sentences/tokensLower vs
+  *     Pattern.split(s, -1) on fuzz + edge inputs;
   *  2. Spark: the Stages A4/A5 native expressions vs the original built-in
   *     split/lower/filter composites, on real fixture page texts — this also
   *     pins the lower() fidelity (UTF8String.toLowerCase) for non-ASCII. */
@@ -20,25 +24,40 @@ class TokenizeEquivalenceSpec extends AnyFunSuite with SharedSpark {
   private def refTokens(lowered: String): Seq[String] =
     TokRe.split(lowered, -1).toSeq.filter(_.nonEmpty)
 
-  test("splitSentences == Pattern.split(-1): edges") {
+  private def strings(a: org.apache.spark.sql.catalyst.util.ArrayData): Seq[String] =
+    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+
+  private def sentences(s: String): Seq[String] =
+    strings(TokenizeRuntime.sentences(UTF8String.fromString(s)))
+
+  /** tokensLower over `s` as a UTF8String, and the regex over the same
+    * converted string lowered the way Spark's lower() does (a lone
+    * surrogate cannot be in a UTF8String: fromString encodes it as '?'). */
+  private def tokensVsRef(s: String): (Seq[String], Seq[String]) = {
+    val u = UTF8String.fromString(s)
+    (strings(TokenizeRuntime.tokensLower(u)), refTokens(u.toLowerCase.toString))
+  }
+
+  test("sentences == Pattern.split(-1): edges") {
     val cases = Seq(
       "", " ", "a", "a.", "a. ", "a. b", "a.  b", "a.\t\nb", "a .b", "a. . b",
       "one. two! three? four", "no separators here", ". leading", " . x",
       "a.b", "a!? b", "a?! b", "tail.   ", "x. y", "x. y", // NBSP is NOT \s
       "é. ü", "𝔘. 𝔙", "a?\r\nb", "!.? ?!. x")
     cases.foreach { s =>
-      assert(Tokenize.splitSentences(s).toSeq == refSentences(s), s"on <<$s>>")
+      assert(sentences(s) == refSentences(s), s"on <<$s>>")
     }
   }
 
-  test("tokensOf == non-empty Pattern.split(-1): edges incl. unicode classes") {
+  test("tokensLower == non-empty Pattern.split(-1): edges, unicode classes") {
     val cases = Seq(
       "", " ", "a b", "a  b!", "-lead", "trail-", "a1b2", "héllo wörld",
       "δ σ ς", "١٢٣ ٤", "漢字 かな", "𝔘nicode 𝟙𝟚", // supplementary letters/digits (𝟙 is No? Nd?)
       "a_b", "x­y", "tab\tsep", "ⅷ roman", // U+2167 is Nl, not Nd
       "a\uD834b", "c\uDD1Ed") // lone surrogates
     cases.foreach { s =>
-      assert(Tokenize.tokensOf(s).toSeq == refTokens(s), s"on <<$s>>")
+      val (got, ref) = tokensVsRef(s)
+      assert(got == ref, s"on <<$s>>")
     }
   }
 
@@ -51,16 +70,14 @@ class TokenizeEquivalenceSpec extends AnyFunSuite with SharedSpark {
       val sb = new java.lang.StringBuilder()
       (0 until n).foreach(_ => sb.appendCodePoint(cps(rng.nextInt(cps.length))))
       val s = sb.toString
-      assert(Tokenize.splitSentences(s).toSeq == refSentences(s),
+      assert(sentences(s) == refSentences(s),
         s"sent divergence on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
-      val low = s.toLowerCase(java.util.Locale.ROOT)
-      assert(Tokenize.tokensOf(low).toSeq == refTokens(low),
-        s"tok divergence on ${low.map(c => f"\\u${c.toInt}%04x").mkString}")
+      val (got, ref) = tokensVsRef(s)
+      assert(got == ref, s"tok divergence on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
     }
   }
 
   test("tokensLower fused-ASCII fast path == UTF8String.toLowerCase + regex reference") {
-    import org.apache.spark.unsafe.types.UTF8String
     val rng = new SplitMix64(0x70CA5EL)
     // ASCII-heavy (exercises the fused single-pass path, incl. uppercase);
     // every 4th trial mixes in multi-byte chars at random positions so the
