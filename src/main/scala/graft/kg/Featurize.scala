@@ -252,10 +252,6 @@ object Featurize {
   private def sh(prefix: String): StreamHash =
     new StreamHash(TextModel.FeatureSeed).feed(prefix)
 
-  /** hash(prefix + s) without the concat. */
-  private def hashCat(prefix: String, s: String): Long =
-    bucket(new StreamHash(TextModel.FeatureSeed).feed(prefix).feed(s).result())
-
   /** hash(prefix + a + sep + b) without the concat. */
   private def hashCat(prefix: String, a: String, sep: String, b: String): Long =
     bucket(new StreamHash(TextModel.FeatureSeed)

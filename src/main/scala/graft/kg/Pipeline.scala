@@ -1,8 +1,7 @@
 package graft.kg
 
-import graft.io.TableIO
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -145,8 +144,8 @@ object Pipeline {
       col("bucket"))
       .select(TriplesColumns.map(col): _*)
     val empty = (committedRows ++ newRows).map(_.n_triples).sum == 0L
-    TableIO.Parquet(cfg.outDir).write(merged, "triples",
-      partitionCols = if (empty) Nil else Seq("bucket"))
+    val w = merged.write.mode(SaveMode.Overwrite)
+    (if (empty) w else w.partitionBy("bucket")).parquet(triplesPath(cfg.outDir))
 
     // explicit schema: an all-empty write may contain no schema-bearing files
     val nTriples = spark.read.schema(merged.schema).parquet(triplesPath(cfg.outDir)).count()

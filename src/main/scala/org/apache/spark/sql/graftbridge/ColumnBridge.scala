@@ -5,20 +5,19 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge between graft's programmatically-constructed Catalyst expressions
-  * and the public Column API.
+  * and the public Column API: how every graft Column handle reaches
+  * Catalyst.
   *
   * Spark 4's Column wraps a ColumnNode, and the Expression<->Column
-  * converters (`ExpressionUtils.column`/`.expression`) are `private[sql]` —
-  * fine for expressions that reach the analyzer through the function
-  * registry (graft.plans.GraftExtensions), but graft.plans.RelationsGenExpr
-  * must carry non-Expression state (a Broadcast model + accumulators) that
-  * cannot ride through `call_function` arguments, so it is constructed
-  * directly and needs this one-hop bridge. Registering per-call uniquely
-  * named builder closures instead would leak registry entries and race two
-  * models registered under one name in the same session (the test suites do
-  * exactly that). This package-placement idiom is the standard Spark
-  * extension-library escape hatch; nothing else in graft lives outside the
-  * graft namespace.
+  * converters (`ExpressionUtils.column`/`.expression`) are `private[sql]`.
+  * The handles of graft.plans.GraftExtensions build their native
+  * expressions directly through this one-hop bridge, so they resolve in
+  * whatever session analyzes the frame, with no function-registry write and
+  * no active session. graft.plans.RelationsGenExpr needs it in any case: it
+  * carries non-Expression state (a Broadcast model + accumulators) that no
+  * SQL function argument can. This package-placement idiom is the standard
+  * Spark extension-library escape hatch; nothing else in graft lives
+  * outside the graft namespace.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -92,6 +92,7 @@ class ExtractSpec extends AnyFunSuite {
     for (_ <- 1 to 1000) {
       val s = (0 until rng.nextInt(40)).map(_ => frags(rng.nextInt(frags.length))).mkString
       val out = x(s)
+      assert(!"(?s)<[^>]*>".r.findFirstIn(out).isDefined, s"residual tag in '$out' from '$s'")
       assert(!out.contains('\r') && !out.contains('\t'))
       assert(out == x(s)) // deterministic
     }
